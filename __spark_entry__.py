@@ -125,7 +125,7 @@ def q_hub_entities(spark, sf):
     — one plain-count exchange with map-side partials instead of the
     distinct aggregate's two exchanges over (token, doc_id) (guide
     §2.3 aggregate-before-shuffle; A/B at sf0.1: 0.59s -> 0.42s
-    best-of-3, scripts/r7_query_variants.py; value parity
+    best-of-3, probe in commit 4247e06; value parity
     oracle-checked)."""
     d = _docs(spark, sf).select(
         F.explode(
@@ -149,7 +149,7 @@ def q_cooccurrence(spark, sf):
     which removes the standalone distinct aggregate's exchange over
     (doc_id, token); the self-join then reuses one exchange for both
     sides (identical subplans). A/B at sf0.1: 1.04s -> 0.74s best-of-3
-    (scripts/r7_query_variants2.py, arm cooc_mid; a full in-array
+    (probe in commit 4247e06, arm cooc_mid; a full in-array
     pair-generation variant with zero join was also measured and LOST
     at 1.39s — the nested-array struct allocation costs more than the
     join it saves). Value parity oracle-checked."""
@@ -224,7 +224,7 @@ def q_text_features(spark, sf):
     # r7: lang_id moves from the Arrow-batched pandas UDF to the
     # decision-identical pure-Column form — the plan's one
     # ArrowEvalPython node disappears (guide §4.1) and the A/B read
-    # 1.33s -> 1.22s best-of-3 at sf0.1 (scripts/r7_query_variants2.py,
+    # 1.33s -> 1.22s best-of-3 at sf0.1 (probe in commit 4247e06,
     # arm tf_oldlangcol). A single-scan zero-shuffle projection variant
     # (per-token stats as in-array folds) was also measured and LOST
     # (1.51s) — the explode+aggregate form vectorizes better here — so
@@ -1897,7 +1897,7 @@ def _score_cc_cte(labels_rel: str, ctx_src: str | None = "derive") -> str:
         `mentions` + `al` CTEs in scope (the driver oracle chains);
       - any other string: name of a relation already carrying
         (conv_id, turn_idx, canon_label) — used by the pytest replay;
-      - None: string kernel only (use_context=False)."""
+      - None: string kernel only, no context bonus."""
     from session_graph_spark.functions.similarity import (CTX_EVIDENCE_TURNS,
                                                           CTX_MIN_JACC,
                                                           CTX_VARIANT_LEV,

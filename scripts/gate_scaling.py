@@ -12,7 +12,7 @@ brief:
   memory-bandwidth ceiling — the pair violated the protocol's own
   "both sides below the ceiling" precondition and cannot read above
   ~0.74 even for a perfect plan (see BASELINE.md amendment; sf0.3 reps
-  retained in scripts/gate_r6_pools_sf03.jsonl);
+  retained in commit 4247e06, scripts/gate_r6_pools_sf03.jsonl);
 - arms: local[1] vs local[4], >= 10 reps per arm, STRICTLY INTERLEAVED
   (1,4,1,4,...), each rep one fresh cold-JVM bench.py subprocess with
   SPARK_GRAFT_ER_REPS=1 SPARK_GRAFT_HEADLINE_ONLY=1;
@@ -21,13 +21,14 @@ brief:
   min-per-side reported alongside but not the gate;
 - pass: eff >= 0.8.
 
-Every rep is appended to scripts/gate_r6_pools.jsonl as it completes
+Every rep is appended to scripts/gate_r6_pools.jsonl (the round-6
+pools are in commit 4247e06) as it completes
 (crash-safe); GATE_ANALYZE_ONLY=1 recomputes the summary from the file
 without running anything.
 
 SECOND AMENDMENT (2026-08-18, before the counted pool): the first
-collection attempt (07:03-08:40 UTC, archived verbatim in
-scripts/gate_r6_pools_contaminated.jsonl) ran CONCURRENTLY with other
+collection attempt (07:03-08:40 UTC, archived verbatim in commit
+4247e06, scripts/gate_r6_pools_contaminated.jsonl) ran CONCURRENTLY with other
 Spark work — the oracle-parity check was still running when rep 0
 started, and crashed harness sessions later launched stray full
 bench.py processes (one was caught live at 08:38, local[4], mid

@@ -176,7 +176,7 @@ def is_linkable_entity_pd(s: pd.Series) -> pd.Series:
 # matches, so the decision is unchanged (the SQL≡pandas equivalence
 # tests pin it); what changes is ~19 Java regex invocations per
 # non-plain candidate becoming 2 (guide §1.2 per-task work — measured
-# in scripts/r7_extract_variants2.py).
+# by the extraction probe in commit 4247e06).
 _L1_PREFIX_KEYS = (
     "filename", "icd_short", "icd_underscore", "proto_code", "snake3",
     "num_prefix", "version", "px", "pure_num", "ip", "duration",
@@ -221,7 +221,7 @@ def is_valid_entity_col(c: Column) -> Column:
     # evaluate only the taken branch, skipping the ~20 rlikes above.
     # (r6: a translate()-char-table variant of these two tests measured
     # identical within noise in a 4-quadrant interleaved A/B —
-    # scripts/extract_microbench.py narrative in BENCH.md — so the
+    # microbench in commit 4247e06, narrative in BENCH.md — so the
     # regex form stays for structural parity with the pandas kernel.)
     plain = c.rlike(r"\A[a-z]+\Z")
     rej = F.when(plain, c.rlike(r"\A[a-f]{6,}\Z") | (n == 2)).otherwise(rej_full)

@@ -56,7 +56,7 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     (query, vector) pair, tripling the fold work (guide §1.2 per-task
     work); sqrt(qq)*sqrt(vv) is evaluated with the same operations in
     the same order, so cosine values are bit-identical. A/B at sf0.1:
-    0.61s -> 0.47s best-of-3 (scripts/r7_query_variants2.py, arm
+    0.61s -> 0.47s best-of-3 (probe in commit 4247e06, arm
     ann_hoist; a salted two-phase top-k was also measured and bought
     nothing at this query count — the per-query window stays)."""
     e = emb.select(F.col(id_col).alias("vec_id"),

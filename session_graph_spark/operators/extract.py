@@ -8,9 +8,12 @@ gazetteer + token candidate generator followed by the same normalization
 (N2) and L1 validity filter (P5), capped at 10 mentions per turn in
 occurrence-priority order (T1, triple_extraction.py:508-512).
 
-Runs as `mapInPandas` over Arrow batches: phrase matching and tokenization
-are vectorized pandas `.str` ops; one output row per extracted mention
-(UDTF shape: 1 row in -> 0..10 rows out).
+The engine path is pure-JVM column expressions (extract_mentions_sql,
+and extract_mention_arrays for resolve()). The Arrow-batched
+`mapInPandas` form (extract_mentions_pandas: vectorized pandas `.str`
+ops, one output row per extracted mention — UDTF shape, 1 row in ->
+0..10 rows out) is kept as the equivalence reference for phrase hits and
+offsets.
 """
 
 from __future__ import annotations
@@ -223,7 +226,7 @@ def extract_mentions_pandas(turns: DataFrame,
 # phrase-hit markers for the single-scan extraction head (r7). The trie
 # regex is the expensive scan — the round-6 microbench priced each trie
 # pass at ~4.5s of the ~20s stage (local[8], sf0.1) and the r7 variant
-# A/B (scripts/r7_extract_variants.py) measured the two-scan form 1.26x
+# A/B (probe in commit 4247e06) measured the two-scan form 1.26x
 # slower end to end — so ONE regexp_replace wraps every phrase hit in
 # \x01..\x02 and both downstream needs become cheap marker scans:
 # phrase list = regexp_extract_all on the marker pattern, residual
@@ -273,12 +276,12 @@ def _marked_head(turns: DataFrame):
         # r7: rtrim with a trim charset — TRIM(TRAILING '.,;:') strips
         # exactly the suffix the former regexp_replace(r'[.,;:]+$')
         # matched, without a per-candidate Java regex invocation
-        # (guide §1.2; A/B in scripts/r7_extract_variants2.py).
+        # (guide §1.2; A/B probe in commit 4247e06).
         return F.rtrim(x, F.lit(".,;:"))
 
     # r7 note: a dedup-BEFORE-validity variant (L1 once per distinct
     # candidate) was A/B'd and measured WORSE at both sf0.1 and sf1.0
-    # (scripts/r7_extract_variants2.py, arm dedup_only) — the extra
+    # (probe in commit 4247e06, arm dedup_only) — the extra
     # array_distinct over all candidates plus the separate phrase-norm
     # pass cost more than the skipped validity evaluations, because
     # most candidates are already distinct within a turn. The
@@ -335,7 +338,7 @@ def explode_mention_arrays(arrays: DataFrame) -> DataFrame:
 def extract_mentions_sql(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
     """Pure-JVM extraction: ONE trie-regex scan marks phrase hits
     (r7 — was regexp_extract_all + regexp_replace, two trie scans;
-    scripts/r7_extract_variants.py measured the two-scan form 1.26x
+    the probe in commit 4247e06 measured the two-scan form 1.26x
     slower with identical output), marker-pattern scans recover the
     phrase list and residual tokens, higher-order array ops do
     normalize/L1-filter/first-occurrence-dedup/cap — all per-row, zero
@@ -501,17 +504,14 @@ def _extract_mentions_sql_offsets(turns: DataFrame) -> DataFrame:
     )
 
 
-def extract_mentions(turns: DataFrame, engine: str = "sql",
-                     with_offsets: bool = False) -> DataFrame:
-    """turns (post P3/P4/P9 filters) -> mentions DataFrame.
+def extract_mentions(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
+    """turns (post P3/P4/P9 filters) -> mentions DataFrame via the
+    whole-stage-codegen column expressions (extract_mentions_sql).
 
     Input must have columns conv_id, turn_idx, platform, ts, text.
-    engine='sql' (default): whole-stage-codegen column expressions.
-    engine='pandas': the Arrow-batched UDF form (same output modulo the
-    raw `mention` surface column; equivalence-tested).
     with_offsets=True adds the `off` char-offset column (triple path;
-    see extract_mentions_sql).
+    see extract_mentions_sql). The Arrow-batched UDF form,
+    extract_mentions_pandas, is the equivalence reference for phrase
+    hits and offsets.
     """
-    if engine == "pandas":
-        return extract_mentions_pandas(turns, with_offsets=with_offsets)
     return extract_mentions_sql(turns, with_offsets=with_offsets)

@@ -138,7 +138,7 @@ def score_pairs(pairs: DataFrame, decisions: DataFrame | None = None,
         # localCheckpoint dedups it: the first action materializes the
         # pair partitions once and both branches read them (r7 A/B at
         # the 25M-turn corpus: cached-arm count 0.87s -> 0.11s,
-        # fingerprints equal — scripts/r7_score_ckpt_ab.py).
+        # fingerprints equal — probe in commit 4247e06).
         pairs = pairs.localCheckpoint(eager=False)
         cached = decisions.join(pairs, PAIR_KEY, "left_semi")
         fresh = pairs.join(decisions, PAIR_KEY, "left_anti")

@@ -1,8 +1,11 @@
 """End-to-end entity-resolution pipeline (SURVEY.md §3.2 Spark lifecycle).
 
 turns -> mentions -> normalized labels -> blocking -> pairwise scoring ->
-connected components -> canonical clusters, with optional per-stage
-checkpointing and a decision cache for resume.
+connected components -> canonical clusters, as one ordered stage list
+(resolve). Each stage is materialized through plans.checkpoint.StageStore,
+whose policy is the only thing `checkpoint_dir` changes: in-memory caches
+by default, keyed parquet checkpoints (resume) when a directory is given.
+A decision cache skips rescoring known pairs.
 
 Stage boundaries follow the reference's link_entities entry point:
   P9 subagent filter, P3 min-length, P4 assistant-only
@@ -33,7 +36,7 @@ from session_graph_spark.operators.extract import (explode_mention_arrays,
                                                    extract_mention_arrays,
                                                    extract_mentions)
 from session_graph_spark.operators.scoring import match_edges, score_distribution, score_pairs
-from session_graph_spark.plans.checkpoint import StageStore, filter_unprocessed
+from session_graph_spark.plans.checkpoint import StageStore
 
 MIN_SESSIONS = 2  # reference --min-sessions default (link_entities.py:824-828)
 
@@ -52,23 +55,16 @@ class ResolutionResult:
     clusters: DataFrame        # (label, cluster_id)
     mention_clusters: DataFrame  # mentions + cluster_id
     metrics: dict = field(default_factory=dict)
-    # internal cache handles the fast path holds beyond the named stages
-    # (r7: the per-turn mention-array cache that `mentions` is a lazy
-    # explode of) — released by unpersist() alongside the named stages
-    extra_caches: list = field(default_factory=list, repr=False)
+    store: StageStore | None = field(default=None, repr=False)
 
     def unpersist(self, blocking: bool = False) -> None:
-        """Release the fast path's cached stages. A long-lived service
-        that calls resolve() per batch (IncrementalRunner) would
-        otherwise accumulate one set of cached mentions/labels/scores
-        per batch in the executor block manager — call this once every
-        consumer has severed lineage (collect/localCheckpoint/write)."""
-        for df in (self.mentions, self.labels, self.pairs_scored,
-                   self.clusters, *self.extra_caches):
-            try:
-                df.unpersist(blocking)
-            except Exception:  # noqa: BLE001 - checkpointed stages aren't cached
-                pass
+        """Release the stages the memory policy cached. A long-lived
+        service that calls resolve() per batch (IncrementalRunner) would
+        otherwise accumulate one set of cached stages per batch in the
+        executor block manager — call this once every consumer has
+        severed lineage (collect/localCheckpoint/write)."""
+        if self.store is not None:
+            self.store.release(blocking)
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
@@ -85,9 +81,23 @@ def prepare_turns(turns: DataFrame) -> DataFrame:
     return t
 
 
+def _extraction_input(turns: DataFrame, dedup_turns: bool) -> DataFrame:
+    """P3/P4 row filters + the five-column projection extraction reads."""
+    base = turns.where(Flt.assistant_only() & Flt.min_length_filter())
+    if "platform" not in base.columns:
+        base = base.withColumn("platform", F.lit("unknown"))
+    base = base.select("conv_id", "turn_idx", "platform", "ts", "text")
+    if dedup_turns:
+        base = base.dropDuplicates(["conv_id", "turn_idx"])
+    return base
+
+
 def mentions_from_turns(turns: DataFrame, dedup_turns: bool = False,
                         with_offsets: bool = False) -> DataFrame:
-    """M1: extraction input filters + deterministic extraction.
+    """M1: extraction input filters + deterministic extraction, one row
+    per mention. Serves the consumers that do not materialize first (the
+    triples offsets path, the queries); resolve() extracts the per-turn
+    array form instead (mention_arrays_from_turns).
 
     with_offsets=True carries each mention's char offset (triple
     construction path; the ER pipeline itself never reads offsets and
@@ -104,30 +114,19 @@ def mentions_from_turns(turns: DataFrame, dedup_turns: bool = False,
     re-assert a guarantee the source already gives is anti-scale. When
     enabled, filters (P3/P4) and the five-column projection still come
     first so the shuffle moves only assistant turns' projected columns."""
-    base = turns.where(Flt.assistant_only() & Flt.min_length_filter())
-    if "platform" not in base.columns:
-        base = base.withColumn("platform", F.lit("unknown"))
-    base = base.select("conv_id", "turn_idx", "platform", "ts", "text")
-    if dedup_turns:
-        base = base.dropDuplicates(["conv_id", "turn_idx"])
-    return extract_mentions(base, with_offsets=with_offsets)
+    return extract_mentions(_extraction_input(turns, dedup_turns),
+                            with_offsets=with_offsets)
 
 
 def mention_arrays_from_turns(turns: DataFrame,
                               dedup_turns: bool = False) -> DataFrame:
     """Same input filters as mentions_from_turns, but stopping at the
     per-turn mention-label ARRAY (extract.extract_mention_arrays) — the
-    form resolve()'s fast path caches (r7): one row per turn instead of
-    one per mention, no per-mention conv_id/mention_id duplication in
-    the cache bytes. `explode_mention_arrays` on this output is
-    expression-identical to mentions_from_turns."""
-    base = turns.where(Flt.assistant_only() & Flt.min_length_filter())
-    if "platform" not in base.columns:
-        base = base.withColumn("platform", F.lit("unknown"))
-    base = base.select("conv_id", "turn_idx", "platform", "ts", "text")
-    if dedup_turns:
-        base = base.dropDuplicates(["conv_id", "turn_idx"])
-    return extract_mention_arrays(base)
+    form resolve()'s mentions stage materializes: one row per turn
+    instead of one per mention, no per-mention conv_id/mention_id
+    duplication in the cached or written bytes. `explode_mention_arrays`
+    on this output is expression-identical to mentions_from_turns."""
+    return extract_mention_arrays(_extraction_input(turns, dedup_turns))
 
 
 def normalized_labels(
@@ -189,7 +188,7 @@ def normalized_labels_from_arrays(
     m_arrays: DataFrame, aliases: DataFrame, min_sessions: int = MIN_SESSIONS
 ) -> DataFrame:
     """normalized_labels computed from the per-turn mention-label ARRAYS
-    (the fast path's cached form) — value-identical to
+    (the form resolve()'s mentions stage materializes) — value-identical to
     `normalized_labels(explode_mention_arrays(m_arrays), aliases)`
     (pinned by tests/test_r7_pipeline_equiv.py), restructured for scale:
 
@@ -207,7 +206,7 @@ def normalized_labels_from_arrays(
     The former shape ran every mention row (112M at sf1.0) through the
     alias broadcast probe and a (canon, conv)-keyed hash dedup — the r7
     probe priced that stage at 21.0s vs 13.0s for this form
-    (scripts/r7_labels_variants.py, interleaved best-of-3, identical
+    (probe in commit 4247e06, interleaved best-of-3, identical
     output fingerprints). The alias lookup happens on per-conv DISTINCT
     labels via a literal-map expression; the dictionary is collected
     once (driver-sized dim by design, same as _mention_context's use)
@@ -220,7 +219,7 @@ def normalized_labels_from_arrays(
     majority of labels) cost O(1) and only true alias hits pay the walk.
     Decision-identical: isin(surfaces) is exactly the condition under
     which element_at is non-null. Measured 17.7s -> 7.8s for the whole
-    labels stage at sf1.0/local[32] (scripts/r7_labels_variants3.py,
+    labels stage at sf1.0/local[32] (probe in commit 4247e06,
     interleaved best-of-3, fingerprints equal)."""
     alias_pairs = [
         (r["surface"], r["canonical"])
@@ -278,7 +277,7 @@ def _mention_context(mentions: DataFrame, aliases: DataFrame,
     broadcast-join result), which Catalyst cannot push below the join,
     so the r5 shape ran every corpus mention row through 2-3 broadcast
     probes before discarding it — measured corpus-scan-bound under load
-    (scripts/ctx_stage_r6*.jsonl: 4x more band rows moved the 1-core
+    (round-6 pools in commit 4247e06: 4x more band rows moved the 1-core
     stage only 14.3s -> 16.6s). The alias dimension is driver-sized by
     design (N4), so the band's surface-form preimage is computed up
     front and pushed down as the scan filter; aliasing then runs on
@@ -356,7 +355,7 @@ def _mention_context(mentions: DataFrame, aliases: DataFrame,
     # band's shuffle BYTES are small — which then serialized the
     # downstream sort + partial group-limit into those few tasks (the
     # round-6 counted pool read ctx_build 0.346 at 1v4,
-    # scripts/ctx_stage_r6_counted.jsonl) — and the 64-way salt
+    # counted pool in commit 4247e06) — and the 64-way salt
     # multiplied the partial limit's groups 64x, so at <= 64*K rows
     # kept per partition the map-side reduction never reduced anything.
     # Dropping both runs the group-limit directly on the cached
@@ -431,13 +430,24 @@ def resolve(
     threshold: float = MATCH_THRESHOLD,
     checkpoint_dir: str | None = None,
     decisions: DataFrame | None = None,
-    processed_watermarks: DataFrame | None = None,
     collect_metrics: bool = False,
     max_parallelism: int | None = None,
-    use_context: bool = True,
 ) -> ResolutionResult:
     """Run the full ER pipeline. All heavy lifting is DataFrame ops; Python
-    only runs inside Arrow-batched UDFs (extraction, L2 filter, scoring).
+    only runs inside Arrow-batched UDFs (L2 filter, LSH, scoring).
+
+    One ordered stage list — mentions (per-turn label arrays), labels,
+    pairs, scored, clusters — each materialized through
+    `StageStore.stage`. `checkpoint_dir` only picks the store's policy:
+    None caches every stage in memory (released by
+    ResolutionResult.unpersist()); a directory writes each stage as
+    parquet under a key that folds in every input shaping it — data
+    fingerprints AND config — so a re-run reuses exactly the stages
+    whose inputs did not change. Stage functions are looked up as module
+    globals when each stage runs, so a tracer can rebind them.
+
+    decisions: a (label_a, label_b, score) cache from an earlier run;
+    cached pairs are reused without rescoring (score_pairs).
 
     max_parallelism: optional cap on concurrent extraction tasks (a
     shuffle-free coalesce of the turns input). The regex/extraction stage
@@ -448,151 +458,84 @@ def resolve(
     sub-second shuffle queries on the same session keep full parallelism
     (the round-2 global knob cost them ~2x).
 
-    use_context (default True): blend the surrounding-turn-context signal
-    into pair scores per the north star ("mention strings AND surrounding
-    turn context") — for kernel scores in [threshold - CTX_WEIGHT,
-    threshold), score = min(kernel + CTX_WEIGHT * jaccard(top-5
-    co-mention context vectors), 1.0); other scores stay the pure kernel.
-    The band gate is exact, not approximate: an additive bonus of at most
-    CTX_WEIGHT cannot flip any decision outside that band, so the
-    expensive context aggregation runs only over turns containing a
-    borderline label (scoring.band_labels + _mention_context) instead of
-    the whole corpus. Disabling can only remove edges, never add."""
+    Scores blend the surrounding-turn-context signal per the north star
+    ("mention strings AND surrounding turn context"): for kernel scores
+    in [threshold - CTX_WEIGHT, threshold), score = min(kernel +
+    CTX_WEIGHT * jaccard(top-5 co-mention context vectors), 1.0); other
+    scores stay the pure kernel. The band gate is exact, not
+    approximate: an additive bonus of at most CTX_WEIGHT cannot flip any
+    decision outside that band, so the context aggregation runs only
+    over turns containing a borderline label (scoring.band_labels +
+    _mention_context) instead of the whole corpus."""
     aliases = aliases if aliases is not None else alias_df(spark)
 
     turns = prepare_turns(turns)
-    turns = filter_unprocessed(turns, processed_watermarks)
     if max_parallelism:
         turns = turns.coalesce(max_parallelism)
 
-    extra_caches: list[DataFrame] = []
-    if checkpoint_dir is None:
-        # fast path: no parquet checkpoints, but each multi-consumer
-        # DataFrame is cached AND materialized before the plans that scan
-        # it twice (blocking/LSH self-joins) — an unmaterialized cache
-        # would be recomputed once per join branch inside the first action
-        store = StageStore(spark, None)
-        ctx_holder: list[DataFrame] = []
-        own_caches: list[DataFrame] = []
-        try:
-            # r7: cache the PRE-EXPLODE per-turn arrays (~10x fewer rows,
-            # no per-mention conv_id/mention_id duplication) and expose
-            # `mentions` as a lazy explode of the cache — the r7 probe
-            # (scripts/r7_extract_probe.py) priced cache POPULATION at
-            # ~19s of the 57.9s mentions stage at sf1.0/local[32] while
-            # cache READS are sub-second, so shrinking the written form
-            # is the lever; every consumer (labels, ctx, mention_clusters)
-            # scans the array cache and explodes in-stage
-            m_arrays = mention_arrays_from_turns(turns).cache()
-            own_caches.append(m_arrays)
-            extra_caches.append(m_arrays)
-            mentions = explode_mention_arrays(m_arrays)
-            # materialize the cache + record the mention row count in ONE
-            # action WITHOUT generating the exploded rows: the mention
-            # count is the sum of per-turn array sizes by construction
-            n_mentions = m_arrays.agg(
-                F.sum(F.size("norm_labels"))).collect()[0][0]
-            store.manifest["mentions"] = {"rows": int(n_mentions or 0)}
-            labels = normalized_labels_from_arrays(
-                m_arrays, aliases, min_sessions).cache()
-            own_caches.append(labels)
-            store.manifest["labels"] = {"rows": labels.count()}
-            pairs = candidate_pairs(labels, label_col="canon_label",
-                                    block_col="block_key")
+    store = StageStore(spark, checkpoint_dir)
+    ctx_caches: list[DataFrame] = []
 
-            def _ctx_builder(scored_fresh: DataFrame) -> DataFrame | None:
-                from session_graph_spark.operators.scoring import band_labels
+    def ctx_builder(scored_fresh: DataFrame) -> DataFrame | None:
+        from session_graph_spark.operators import scoring
 
-                ctx = _mention_context(mentions, aliases, labels,
-                                       band_labels(scored_fresh))
-                if ctx is not None:
-                    ctx_holder.append(ctx)
-                return ctx
+        ctx = _mention_context(mentions, aliases, labels,
+                               scoring.band_labels(scored_fresh))
+        if ctx is not None:
+            ctx_caches.append(ctx)
+        return ctx
 
-            scored = score_pairs(
-                pairs, decisions=decisions,
-                context_builder=_ctx_builder if use_context else None,
-            ).cache()
-            own_caches.append(scored)
-            store.manifest["scored"] = {"rows": scored.count()}
-        except Exception:
-            # a failure mid-build (poison data in extraction, scoring ...)
-            # must not leak the caches materialized before it — the
-            # quarantine path's bisection probes hit this repeatedly and
-            # would otherwise accumulate orphaned cached stages exactly
-            # when memory is already tight
-            for df in own_caches + ctx_holder:
-                try:
-                    df.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
-            raise
-        for c in ctx_holder:
-            c.unpersist()  # scored is materialized; the ctx cache is dead
-        edges = match_edges(scored, threshold)
-        clusters = assign_clusters(labels, edges, label_col="canon_label").cache()
-    else:
-        store = StageStore(spark, checkpoint_dir)
+    try:
         turns_fp = store.fingerprint(turns.select("conv_id", "turn_idx", "text"))
-        # stage keys fold in EVERY input that shapes the stage's output —
-        # data fingerprints AND config — so re-running with a different
-        # alias table, min_sessions, decision cache, or threshold never
-        # returns a stale checkpoint
         alias_fp = store.fingerprint(aliases)
-        mentions = store.stage("mentions", turns_fp, lambda: mentions_from_turns(turns))
+        # mentions are materialized as per-turn label ARRAYS, not exploded
+        # rows: ~10x fewer rows and no per-mention conv_id/mention_id
+        # bytes, and materializing is this stage's cost (cache population
+        # was ~19s of the 57.9s stage at sf1.0/local[32] while reads were
+        # sub-second — probe in commit 4247e06). The form is part of the
+        # key: a directory written when this stage held exploded rows is
+        # recomputed, not read back as arrays. The recorded row count is
+        # the MENTION count, the sum of the array sizes
+        m_arrays = store.stage(
+            "mentions", f"arrays:{turns_fp}",
+            lambda: mention_arrays_from_turns(turns),
+            rows=lambda df: df.agg(F.sum(F.size("norm_labels"))).collect()[0][0])
+        # every consumer (labels fallback, ctx, mention_clusters) scans the
+        # materialized arrays and explodes in-stage
+        mentions = explode_mention_arrays(m_arrays)
         labels = store.stage(
             "labels", f"{turns_fp}:{alias_fp}:ms={min_sessions}",
-            lambda: normalized_labels(mentions, aliases, min_sessions),
-        )
+            lambda: normalized_labels_from_arrays(m_arrays, aliases, min_sessions))
         labels_fp = store.fingerprint(labels)
         decisions_fp = store.fingerprint(decisions) if decisions is not None else "none"
         pairs = store.stage(
             "pairs", labels_fp,
-            lambda: candidate_pairs(labels, label_col="canon_label", block_col="block_key"),
-        )
+            lambda: candidate_pairs(labels, label_col="canon_label",
+                                    block_col="block_key"))
         # ctx derives from mentions+aliases but is NOT a function of the
         # labels table alone (co-occurrence can change while the distinct
-        # label set stays fixed), so the ctx part of the stage key is the
-        # turns+alias fingerprint, not labels_fp. Built lazily INSIDE the
-        # stage lambda: a reused checkpoint must not pay the context
-        # self-join
-        ctx_key = f"{turns_fp}:{alias_fp}" if use_context else "off"
-        ctx_holder: list[DataFrame] = []
-
-        def _ctx_builder(scored_fresh: DataFrame) -> DataFrame | None:
-            from session_graph_spark.operators.scoring import band_labels
-
-            ctx = _mention_context(mentions, aliases, labels,
-                                   band_labels(scored_fresh))
-            if ctx is not None:
-                ctx_holder.append(ctx)
-            return ctx
-
-        try:
-            scored = store.stage(
-                "scored", f"{labels_fp}:dec={decisions_fp}:ctx={ctx_key}",
-                lambda: score_pairs(
-                    pairs, decisions=decisions,
-                    context_builder=_ctx_builder if use_context else None,
-                ),
-            )
-        except Exception:
-            # mirror the fast path's cleanup: a stage failure after
-            # _ctx_builder cached the context frame must not leak one
-            # cached DataFrame per attempt on the quarantine bisection path
-            for c in ctx_holder:
-                try:
-                    c.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
-            raise
-        for c in ctx_holder:
-            c.unpersist()  # scored stage is parquet-materialized
+        # label set stays fixed), so the key carries the turns+alias
+        # fingerprints too. A reused stage never calls ctx_builder
+        score_key = f"{labels_fp}:dec={decisions_fp}:ctx={turns_fp}:{alias_fp}"
+        scored = store.stage(
+            "scored", score_key,
+            lambda: score_pairs(pairs, decisions=decisions,
+                                context_builder=ctx_builder))
         edges = match_edges(scored, threshold)
         clusters = store.stage(
-            "clusters", f"{labels_fp}:dec={decisions_fp}:ctx={ctx_key}:th={threshold}",
-            lambda: assign_clusters(labels, edges, label_col="canon_label"),
-        )
+            "clusters", f"{score_key}:th={threshold}",
+            lambda: assign_clusters(labels, edges, label_col="canon_label"))
+    except Exception:
+        # a failure mid-build (poison data in extraction, scoring ...)
+        # must not leak the caches materialized before it — the
+        # quarantine path's bisection probes hit this repeatedly and
+        # would otherwise accumulate orphaned cached stages exactly when
+        # memory is already tight
+        store.release()
+        raise
+    finally:
+        for c in ctx_caches:  # scored is materialized; the ctx cache is dead
+            c.unpersist()
 
     # r7: ONE broadcast probe instead of two. The former shape —
     # apply_aliases (broadcast left join on the alias dim) then an inner
@@ -638,5 +581,5 @@ def resolve(
     return ResolutionResult(
         mentions=mentions, labels=labels, pairs_scored=scored, edges=edges,
         clusters=clusters, mention_clusters=mention_clusters, metrics=metrics,
-        extra_caches=extra_caches,
+        store=store,
     )

@@ -47,6 +47,12 @@ def get_spark(
         # 16m advisory keeps big shuffles at healthy parallelism
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
+        # the same coalescing for cached plans: resolve()'s memory policy
+        # caches every stage, and a cache otherwise freezes the pre-AQE
+        # shuffle width — the ~23k-row er_wide pairs cache kept 8
+        # partitions at local[4] and every downstream stage inherited
+        # them (592 vs 243 tasks per resolve)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

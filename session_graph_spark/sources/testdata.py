@@ -21,7 +21,7 @@ def documents_as_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r7 note: a narrow-window + broadcast-join-back variant (text kept
     # out of the window exchange) was A/B'd at sf0.1 and measured a
     # wash end-to-end (docs_e2e_old 4.98s vs _new 5.21s best-of-3,
-    # scripts/r7_query_variants2.py) — the ~20 source keys already
+    # probe in commit 4247e06) — the ~20 source keys already
     # spread the window across the reduce width, so the join-back's
     # extra broadcast job buys nothing. Kept in the simpler form.
     docs = load(spark, sf_dir, "documents")

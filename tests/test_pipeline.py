@@ -103,16 +103,26 @@ def test_resume_from_checkpoint(spark, tmp_path):
 
 
 def test_watermark_skip(spark):
-    from session_graph_spark.plans.checkpoint import conversation_watermarks, filter_unprocessed
+    from session_graph_spark.plans.checkpoint import conversation_watermarks
 
     turns = corpus.generate_turns(spark, n_convs=8, seed=42)
     wm = conversation_watermarks(turns)
-    # mark half the conversations processed
-    done = wm.limit(4)
-    remaining = filter_unprocessed(turns, done)
-    assert remaining.select("conv_id").distinct().count() == turns.select("conv_id").distinct().count() - 4
+    # mark half the conversations processed; the (conv_id, content_hash)
+    # anti-join IncrementalRunner runs leaves exactly the other half
+    done = spark.createDataFrame(wm.orderBy("conv_id").limit(4).collect(), wm.schema)
+    remaining = wm.join(done, ["conv_id", "content_hash"], "left_anti")
+    assert remaining.count() == turns.select("conv_id").distinct().count() - 4
     # all marked processed -> nothing left
-    assert filter_unprocessed(turns, wm).count() == 0
+    assert wm.join(wm, ["conv_id", "content_hash"], "left_anti").count() == 0
+    # editing one turn changes exactly that conversation's hash
+    first = wm.orderBy("conv_id").first()["conv_id"]
+    edited = turns.withColumn(
+        "text", F.when((F.col("conv_id") == first) & (F.col("turn_idx") == 0),
+                       F.concat(F.col("text"), F.lit(" edited")))
+        .otherwise(F.col("text")))
+    changed = conversation_watermarks(edited).join(
+        wm, ["conv_id", "content_hash"], "left_anti")
+    assert [r["conv_id"] for r in changed.collect()] == [first]
 
 
 def test_dedup_turns_opt_in(spark):
@@ -127,6 +137,59 @@ def test_dedup_turns_opt_in(spark):
     m2 = mentions_from_turns(doubled, dedup_turns=True).count()
     assert m1 == m2
     assert mentions_from_turns(doubled).count() == 2 * m1
+
+
+def _rows(df):
+    return sorted(tuple(str(v) for v in r) for r in df.collect())
+
+
+def test_checkpoint_policy_matches_memory_policy(spark, tmp_path):
+    """resolve() runs one stage list under either StageStore policy:
+    with and without checkpoint_dir the outputs are row-identical, and a
+    checkpoint-path pass fed the first pass's scores as its decision
+    cache reproduces the clusters."""
+    turns = corpus.generate_turns(spark, n_convs=60, seed=42)
+    mem = resolve(spark, turns)
+    ckpt = resolve(spark, turns, checkpoint_dir=str(tmp_path / "run"))
+    for name in ("labels", "pairs_scored", "clusters", "mention_clusters"):
+        assert _rows(getattr(ckpt, name)) == _rows(getattr(mem, name)), name
+    for stage in ("mentions", "labels", "pairs", "scored", "clusters"):
+        assert ckpt.metrics[stage]["rows"] == mem.metrics[stage]["rows"], stage
+    assert mem.metrics["mentions"]["rows"] == mem.mentions.count()
+
+    resumed = resolve(spark, turns, checkpoint_dir=str(tmp_path / "run_dec"),
+                      decisions=ckpt.pairs_scored)
+    assert _rows(resumed.clusters) == _rows(mem.clusters)
+    mem.unpersist()
+
+
+def test_checkpoint_recomputes_exploded_mentions_stage(spark, tmp_path):
+    """A checkpoint directory whose mentions stage holds exploded mention
+    rows (the layout written before the stage became per-turn arrays)
+    under the bare turns fingerprint must be recomputed, not read back
+    as arrays."""
+    import json
+
+    from session_graph_spark.plans.checkpoint import StageStore
+    from session_graph_spark.plans.pipeline import mentions_from_turns, prepare_turns
+
+    turns = corpus.generate_turns(spark, n_convs=25, seed=42)
+    root = tmp_path / "old_layout"
+    prepared = prepare_turns(turns)
+    turns_fp = StageStore(spark, root).fingerprint(
+        prepared.select("conv_id", "turn_idx", "text"))
+    old = mentions_from_turns(prepared)
+    old.write.parquet(str(root / "mentions"))
+    (root / "manifest.json").write_text(json.dumps({"mentions": {
+        "input_fp": turns_fp, "path": str(root / "mentions"),
+        "rows": old.count(), "wall_sec": 1.0}}))
+
+    res = resolve(spark, turns, checkpoint_dir=str(root))
+    manifest = json.loads((root / "manifest.json").read_text())
+    assert manifest["mentions"]["input_fp"] == f"arrays:{turns_fp}"
+    assert manifest["mentions"]["rows"] == old.count()
+    assert "norm_labels" in spark.read.parquet(str(root / "mentions")).columns
+    assert _rows(res.mentions) == _rows(old)
 
 
 def test_checkpoint_invalidates_on_config_change(spark, tmp_path):
@@ -175,7 +238,7 @@ def test_sql_cc_replays_pipeline_merges(result):
     candidates + DuckDB (kernel + context-Jaccard bonus) + recursive
     closure == LSH candidates + Arrow kernel + JVM ctx bonus +
     distributed CC. The canonicalized mentions feed the SQL side's
-    context derivation, mirroring resolve(use_context=True)."""
+    context derivation, mirroring resolve()'s context bonus."""
     import sys
 
     import duckdb
