@@ -384,16 +384,6 @@ def generate_turns_distributed(spark, n_convs: int, seed: int = 42,
 # --------------------------------------------------------------------------
 # Ground truth for the F1 gate
 # --------------------------------------------------------------------------
-def ground_truth_pdf() -> pd.DataFrame:
-    """variant surface form (normalized, as the pipeline normalizes it)
-    -> canonical entity."""
-    rows = []
-    for canon, variants in ENTITY_VARIANTS.items():
-        for v in variants:
-            rows.append(dict(surface=v.strip().lower(), canonical=canon))
-    return pd.DataFrame(rows).drop_duplicates("surface").reset_index(drop=True)
-
-
 def labeled_pairs_pdf() -> pd.DataFrame:
     """Labeled surface-form pairs (FIXTURES.md §4): positives = variants of
     the same canonical; negatives = confusable cross-entity pairs. Pairs are

@@ -4,7 +4,8 @@ The reference applies ~13 regex/rule groups per string, row-at-a-time
 (L1 validity at extraction: triple_extraction.py:109-258; L2 linkability
 before the expensive linking stage: link_entities.py:80-255). Here both
 levels are vectorized pandas kernels over whole Arrow batches (pandas
-`.str` ops with module-level precompiled patterns), exposed as
+`.str` ops with module-level precompiled patterns). L1 runs in the engine
+as the JVM column `is_valid_entity_col`; L2 is exposed as a
 `pandas_udf(BooleanType())` for use in DataFrame `.filter()`.
 
 Rule order matters and is preserved: empty/1-char and stopwords reject
@@ -226,25 +227,6 @@ def is_valid_entity_col(c: Column) -> Column:
     plain = c.rlike(r"\A[a-z]+\Z")
     rej = F.when(plain, c.rlike(r"\A[a-f]{6,}\Z") | (n == 2)).otherwise(rej_full)
     return (~base_reject) & (white | ~rej)
-
-
-def _flags(pat: re.Pattern) -> str:
-    return "(?i)" if pat.flags & re.I else ""
-
-
-def _to_java_prefix(pat: re.Pattern) -> str:
-    """Python re.match(p) == Java regex search of \\A(?:p)."""
-    return _flags(pat) + r"\A(?:" + pat.pattern + ")"
-
-
-def _to_java_search(pat: re.Pattern) -> str:
-    return _flags(pat) + pat.pattern
-
-
-# ---- Spark-facing pandas UDFs ----------------------------------------------
-@F.pandas_udf(BooleanType())
-def is_valid_entity(s: pd.Series) -> pd.Series:  # pragma: no cover (runs on executors)
-    return is_valid_entity_pd(s)
 
 
 @F.pandas_udf(BooleanType())

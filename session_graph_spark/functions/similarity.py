@@ -181,13 +181,3 @@ def combined_score_batch(a: pd.Series, b: pd.Series) -> pd.Series:
 @F.pandas_udf(DoubleType())
 def pair_score(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
     return combined_score_batch(a, b)
-
-
-@F.pandas_udf(DoubleType())
-def token_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-    av = a.fillna("").to_numpy(dtype=object)
-    bv = b.fillna("").to_numpy(dtype=object)
-    out = np.empty(len(av), dtype=np.float64)
-    for i in range(len(av)):
-        out[i] = token_jaccard(av[i], bv[i])
-    return pd.Series(out, index=a.index)

@@ -16,7 +16,7 @@ row here, which is what makes this survive 10^12 turns. Occurrence-level
 skew is handled where occurrences join back to clusters (AQE skew join +
 optional salting, see `with_salt`).
 
-Runaway blocks (a band bucket collecting > max_block_size labels) are
+Runaway blocks (a band bucket collecting > MAX_BLOCK_SIZE labels) are
 salted into bounded sub-buckets rather than generating O(n^2) pairs.
 """
 
@@ -96,12 +96,11 @@ def candidate_pairs(
     labels: DataFrame,
     label_col: str = "canon_label",
     block_col: str = "block_key",
-    max_block_size: int = MAX_BLOCK_SIZE,
 ) -> DataFrame:
     """Distinct (label, block_key) rows -> candidate (label_a, label_b) pairs.
 
     Union of exact-key pairs and LSH-bucket pairs, deduplicated. Buckets
-    larger than max_block_size are salted into deterministic sub-buckets
+    larger than MAX_BLOCK_SIZE are salted into deterministic sub-buckets
     (lexicographic rank order) so pair counts stay bounded with partial
     recall instead of over-cap labels losing every candidate; bucket
     sizes are observable via `block_metrics`.
@@ -110,7 +109,7 @@ def candidate_pairs(
     exact = _pairs_within(keyed, block_col, label_col)
 
     buckets = lsh_buckets(labels, label_col)
-    # over-cap buckets are salted into sub-buckets of <= max_block_size
+    # over-cap buckets are salted into sub-buckets of <= MAX_BLOCK_SIZE
     # (rank by label, deterministic) rather than truncated: pair count per
     # join key stays bounded while labels past the cap keep their
     # intra-sub-bucket candidates (graceful recall degradation)
@@ -120,7 +119,7 @@ def candidate_pairs(
         .withColumn(
             "band_key",
             F.concat("band_key", F.lit("#"),
-                     ((F.col("rn") - 1) / F.lit(max_block_size)).cast("int")),
+                     ((F.col("rn") - 1) / F.lit(MAX_BLOCK_SIZE)).cast("int")),
         )
         .drop("rn")
     )

@@ -106,7 +106,6 @@ DRIVER_CC_THRESHOLD = 200_000
 
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = MAX_ITERATIONS,
     driver_threshold: int = DRIVER_CC_THRESHOLD,
 ) -> DataFrame:
     """Edge list (u:string, v:string) -> assignment (label, cluster_id).
@@ -127,7 +126,7 @@ def connected_components(
         if len(probe) <= driver_threshold:
             return _driver_union_find(edges.sparkSession, probe)
     prev = (-1, 0)
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         e = _large_star(e)
         e = _small_star(e).localCheckpoint(eager=False)
         cur = _fingerprint(e)
@@ -135,7 +134,7 @@ def connected_components(
             break
         prev = cur
     else:  # pragma: no cover
-        raise RuntimeError(f"CC did not converge in {max_iterations} iterations")
+        raise RuntimeError(f"CC did not converge in {MAX_ITERATIONS} iterations")
 
     # converged edge set is a star graph: u (member) -> v (root)
     members = e.select(F.col("u").alias("label"), F.col("v").alias("cluster_id"))

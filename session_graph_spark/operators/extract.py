@@ -8,12 +8,13 @@ gazetteer + token candidate generator followed by the same normalization
 (N2) and L1 validity filter (P5), capped at 10 mentions per turn in
 occurrence-priority order (T1, triple_extraction.py:508-512).
 
-The engine path is pure-JVM column expressions (extract_mentions_sql,
-and extract_mention_arrays for resolve()). The Arrow-batched
-`mapInPandas` form (extract_mentions_pandas: vectorized pandas `.str`
-ops, one output row per extracted mention — UDTF shape, 1 row in ->
-0..10 rows out) is kept as the equivalence reference for phrase hits and
-offsets.
+The engine path is pure-JVM column expressions over ONE trie-regex scan
+(_marked_head): extract_mentions for the mention table (optionally with
+each mention's exact char offset), extract_mention_arrays for resolve().
+The Arrow-batched `mapInPandas` form (extract_mentions_pandas: vectorized
+pandas `.str` ops, one output row per extracted mention — UDTF shape, 1
+row in -> 0..10 rows out) is kept as the equivalence reference for phrase
+hits and offsets.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ for _p in _PHRASES:
     if _p != " ".join(_p.split()):
         raise ValueError(
             f"gazetteer phrase {_p!r} is not trimmed/single-spaced; "
-            "extract_mentions_sql's reduced norm() would diverge from "
+            "extract_mentions' reduced norm() would diverge from "
             "normalize_entity on its matches")
 
 
@@ -108,39 +109,19 @@ def _normalize_series(s: pd.Series) -> pd.Series:
     return s.str.replace(r"[.,;:]+$", "", regex=True)
 
 
-def _row_offsets(txt: str, phs: list[str], tks: list[str]) -> list[int]:
-    """1-based char offsets (original lowered-text coordinates) for one
-    row's phrase hits + residual tokens, mirroring the SQL form's locate
-    folds EXACTLY (sequential left-to-right find walk; resid offsets
-    mapped back through the cumulative phrase-collapse shifts) so the
-    pandas and SQL engines stay bit-equal."""
+def _row_offsets(txt: str) -> list[int]:
+    """1-based char offsets of one row's phrase hits followed by its
+    residual tokens (the order extract_mentions_batch concatenates them),
+    read straight off the regex match starts: the residual tokens are the
+    \\S+ runs in the gaps between phrase matches."""
     ph_offs: list[int] = []
-    frm = 0
-    for p in phs:
-        i = txt.find(p, frm)
-        ph_offs.append(i + 1)
-        frm = i + len(p)
-    # phrase k (length L, resid offset roff) collapsed to one space:
-    # resid positions past it shift by a further L-1
-    shifts: list[tuple[int, int]] = []
-    d = 0
-    for p, o in zip(phs, ph_offs):
-        shifts.append((o - d, d + len(p) - 1))
-        d += len(p) - 1
-    resid = _PHRASE_RE.sub(" ", txt)
     tok_offs: list[int] = []
-    frm = 0
-    for tk in tks:
-        i = resid.find(tk, frm)
-        r = i + 1
-        frm = i + len(tk)
-        sh = 0
-        for roff, s in shifts:  # roff strictly increasing
-            if roff < r:
-                sh = s
-            else:
-                break
-        tok_offs.append(r + sh)
+    prev = 0
+    for m in _PHRASE_RE.finditer(txt):
+        tok_offs += [t.start() + 1 for t in _TOKEN_RE.finditer(txt, prev, m.start())]
+        ph_offs.append(m.start() + 1)
+        prev = m.end()
+    tok_offs += [t.start() + 1 for t in _TOKEN_RE.finditer(txt, prev)]
     return ph_offs + tok_offs
 
 
@@ -170,10 +151,7 @@ def extract_mentions_batch(pdf: pd.DataFrame,
     base["mention"] = phrases + tokens
     base["n_ph"] = phrases.str.len()
     if with_offsets:
-        base["off"] = [
-            _row_offsets(t, p, k)
-            for t, p, k in zip(text.tolist(), phrases.tolist(), tokens.tolist())
-        ]
+        base["off"] = [_row_offsets(t) for t in text.tolist()]
     out = base.explode(["mention", *off_cols], ignore_index=False)
     out = out[out["mention"].notna()]
     if len(out) == 0:
@@ -210,7 +188,7 @@ def extract_mentions_pandas(turns: DataFrame,
                             with_offsets: bool = False) -> DataFrame:
     """Arrow-batched pandas implementation (the UDTF-shaped F1 form).
 
-    Kept as the reference implementation; `extract_mentions_sql` is
+    Kept as the reference implementation; `extract_mentions` is
     equivalence-tested against it and is the default in the pipeline.
     """
     cols = ["conv_id", "turn_idx", "platform", "ts", "text"]
@@ -239,6 +217,11 @@ def extract_mentions_pandas(turns: DataFrame,
 _M1, _M2 = "\x01", "\x02"
 _MARKER_EXTRACT = rf"{_M1}([^{_M2}]*){_M2}"
 _MARKER_OR_WS = rf"{_M1}[^{_M2}]*{_M2}|\s+"
+# one phrase hit (markers included) or residual token plus the whitespace
+# after it: in text order the fragments tile `resid` past its leading
+# whitespace, so their lengths locate every candidate without a search
+_FRAGMENT = rf"((?:{_M1}[^{_M2}]*{_M2}|[^\s{_M1}{_M2}]+)\s*)"
+_WS = " \t\n\x0b\f\r"  # the characters of Java's \s
 
 
 def _marked_head(turns: DataFrame):
@@ -305,7 +288,7 @@ def extract_mention_arrays(turns: DataFrame) -> DataFrame:
     Use `explode_mention_arrays` ONLY over the materialized cache (an
     InMemoryRelation): exploding this plan uncached invites the
     generator-inlining hazard documented in _marked_head — the uncached
-    full-table path is extract_mentions_sql."""
+    full-table path is extract_mentions."""
     t, deduped = _marked_head(turns)
     return t.select(
         "conv_id", "turn_idx", "platform", "ts",
@@ -313,205 +296,121 @@ def extract_mention_arrays(turns: DataFrame) -> DataFrame:
     )
 
 
+def _mention_rows(exploded: DataFrame, *extra: str) -> DataFrame:
+    """(conv_id, turn_idx, platform, ts, pos, norm_label, *extra) -> the
+    standard mention table. mention/mention_id are derived columns —
+    computing them after the explode (post-cache on the ER path) means
+    the cache never stores or concatenates them unless a consumer
+    actually reads them."""
+    from pyspark.sql import functions as F
+
+    return exploded.select(
+        "conv_id", "turn_idx", "platform", "ts",
+        F.col("norm_label").alias("mention"),
+        "norm_label",
+        F.concat_ws("|", "conv_id", "turn_idx", "pos").alias("mention_id"),
+        F.col("pos").cast("int").alias("pos"),
+        *extra,
+    )
+
+
 def explode_mention_arrays(arrays: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, platform, ts, norm_labels array) -> the
-    standard mention table (identical schema/values to
-    extract_mentions_sql; equivalence pinned by
-    tests/test_r7_pipeline_equiv.py). mention/mention_id are derived
-    columns — computing them here (post-cache) means the ER cache never
-    stores or concatenates them unless a consumer actually reads them."""
+    standard mention table (identical schema/values to extract_mentions;
+    equivalence pinned by tests/test_r7_pipeline_equiv.py)."""
     from pyspark.sql import functions as F
 
-    out = arrays.select(
+    return _mention_rows(arrays.select(
         "conv_id", "turn_idx", "platform", "ts",
         F.posexplode("norm_labels").alias("pos", "norm_label"),
-    )
-    return out.select(
-        "conv_id", "turn_idx", "platform", "ts",
-        F.col("norm_label").alias("mention"),
-        "norm_label",
-        F.concat_ws("|", "conv_id", "turn_idx", "pos").alias("mention_id"),
-        F.col("pos").cast("int").alias("pos"),
-    )
+    ))
 
 
-def extract_mentions_sql(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
-    """Pure-JVM extraction: ONE trie-regex scan marks phrase hits
-    (r7 — was regexp_extract_all + regexp_replace, two trie scans;
-    the probe in commit 4247e06 measured the two-scan form 1.26x
-    slower with identical output), marker-pattern scans recover the
-    phrase list and residual tokens, higher-order array ops do
-    normalize/L1-filter/first-occurrence-dedup/cap — all per-row, zero
-    shuffle, no Python workers. Emits mention = normalized label (the
-    pandas form keeps the raw surface; nothing downstream reads it).
+def _with_candidate_offsets(t: DataFrame) -> DataFrame:
+    """Adds to _marked_head's frame, per turn and in text order, every
+    extraction candidate's normalized text (`ms`; a phrase hit keeps its
+    \\x01 marker so phrase and token candidates stay apart) and its
+    1-based char offset in the lowered truncated text (`offs`).
 
-    with_offsets=True additionally carries each kept mention's 1-based
-    char offset in the lowered truncated text (see
-    _extract_mentions_sql_offsets; that path keeps the two-scan head —
-    its locate() folds need the space-replaced residual coordinates).
-    The default path is value-identical to the offset-free round-5
-    output: ER never consumes offsets, and carrying a dead column
-    through the mention shuffle at 10^12 turns is pure cost — triple
-    construction opts in.
-    """
-    if with_offsets:
-        return _extract_mentions_sql_offsets(turns)
+    One cheap fragment scan over `resid` lists the candidates with their
+    trailing whitespace. An offset is the previous one plus the previous
+    fragment's length, less its two marker bytes if it was a phrase hit
+    (markers are not in the original text)."""
     from pyspark.sql import functions as F
 
-    t, deduped = _marked_head(turns)
-    out = t.select(
-        "conv_id", "turn_idx", "platform", "ts",
-        F.posexplode(deduped).alias("pos", "norm_label"),
+    lead = F.length("resid") - F.length(F.ltrim("resid", F.lit(_WS)))
+    offs = F.aggregate(
+        "frags",
+        F.struct((lead + 1).alias("at"),
+                 F.expr("cast(array() as array<int>)").alias("offs")),
+        lambda acc, f: F.struct(
+            (acc["at"] + F.length(f)
+             - 2 * F.startswith(f, F.lit(_M1)).cast("int")).alias("at"),
+            F.array_append(acc["offs"], acc["at"]).alias("offs"),
+        ),
+        lambda acc: acc["offs"],
     )
-    return out.select(
-        "conv_id", "turn_idx", "platform", "ts",
-        F.col("norm_label").alias("mention"),
-        "norm_label",
-        F.concat_ws("|", "conv_id", "turn_idx", "pos").alias("mention_id"),
-        F.col("pos").cast("int").alias("pos"),
-    )
+    # the same norm as _marked_head's, whitespace included in the charset
+    # to drop the fragment's trailing whitespace in the same pass
+    ms = F.transform(
+        "frags", lambda f: F.rtrim(F.translate(f, _M2, ""), F.lit(".,;:" + _WS)))
+    return (t.withColumn("frags", F.regexp_extract_all("resid", F.lit(_FRAGMENT), 1))
+            .withColumn("offs", offs).withColumn("ms", ms))
 
 
-def _extract_mentions_sql_offsets(turns: DataFrame) -> DataFrame:
-    """The pure-JVM extraction, additionally carrying each kept mention's
-    1-based char offset (`off`) in the lowered truncated turn text —
-    consumed by triples.build_triples so per-pair cue predicates are
-    chosen by TRUE mention span (reference picks a predicate per triple,
-    triple_extraction.py:348-374) instead of re-locating normalized
-    labels downstream, which cannot find an alias-normalized surface
-    (k8s -> kubernetes) and mislocates a label embedded in another word
-    ('java' inside 'javascript').
-
-    Offset recovery, all JVM higher-order expressions (no UDF):
-    - phrase hits: a sequential locate() fold mirrors the regex's
-      left-to-right non-overlapping walk (the cue-fold technique,
-      triples.py). Best-effort corner: locate() is not lookaround-aware,
-      so a phrase whose text also occurs earlier EMBEDDED in a word
-      (matched by locate, skipped by the regex) shifts that phrase's
-      offset; the blast radius is one pair's cue choice.
-    - residual tokens: located in the phrase-blanked residual — exact,
-      because inter-token gaps there are pure whitespace — then mapped
-      back to original coordinates by adding the cumulative collapse
-      shift of every phrase replaced before them (a phrase of length L
-      became one space: positions after it shift by L-1).
-
-    The pandas form (_row_offsets) replays the same folds for
-    bit-equality; the equivalence test pins it.
-    """
+def _first_offset(label):
+    """Offset of `label`'s first candidate in phrases-first order — the
+    occurrence _marked_head's dedup keeps, because a phrase hit is always
+    kept and a token's validity depends only on its label."""
     from pyspark.sql import functions as F
 
-    from session_graph_spark.functions.filters import is_valid_entity_col
-
-    java_phrase_re = _PHRASE_RE.pattern
-    lower_text = F.lower(F.substring("text", 1, EXTRACT_INPUT_MAX_CHARS))
-
-    t = turns.select(
-        "conv_id", "turn_idx", "platform", "ts",
-        lower_text.alias("__lt"),
-        F.regexp_extract_all(lower_text, F.lit(java_phrase_re), 1).alias("ph"),
-        F.regexp_replace(lower_text, java_phrase_re, " ").alias("resid"),
-    ).withColumn(
-        # 1-based offset of each phrase hit in __lt (sequential locate
-        # fold — same walk as the extraction regex)
-        "ph_offs",
-        F.expr(
-            "aggregate(ph,"
-            " named_struct('frm', 1, 'offs', cast(array() as array<int>)),"
-            " (acc, c) -> named_struct("
-            "   'frm', locate(c, __lt, acc.frm) + length(c),"
-            "   'offs', array_append(acc.offs, locate(c, __lt, acc.frm))),"
-            " acc -> acc.offs)"
-        ),
-    ).withColumn(
-        # resid -> original coordinate map: entry k = (phrase k's resid
-        # offset, cumulative original-minus-resid shift for positions
-        # after it); roff is strictly increasing by construction
-        "ph_map",
-        F.expr(
-            "aggregate(arrays_zip(ph, ph_offs),"
-            " named_struct('d', 0, 'arr',"
-            "   cast(array() as array<struct<roff:int, shift:int>>)),"
-            " (acc, x) -> named_struct("
-            "   'd', acc.d + length(x.ph) - 1,"
-            "   'arr', array_append(acc.arr, named_struct("
-            "     'roff', x.ph_offs - acc.d,"
-            "     'shift', acc.d + length(x.ph) - 1))),"
-            " acc -> acc.arr)"
-        ),
-    ).withColumn(
-        "toks", F.filter(F.split("resid", r"\s+"), lambda x: x != "")
-    ).withColumn(
-        # token offsets in resid: exact (gaps between consecutive \\S+
-        # runs are pure whitespace, so the forward locate can never land
-        # early)
-        "tok_roffs",
-        F.expr(
-            "aggregate(toks,"
-            " named_struct('frm', 1, 'offs', cast(array() as array<int>)),"
-            " (acc, c) -> named_struct("
-            "   'frm', locate(c, resid, acc.frm) + length(c),"
-            "   'offs', array_append(acc.offs, locate(c, resid, acc.frm))),"
-            " acc -> acc.offs)"
-        ),
-    ).withColumn(
-        # candidates = phrase structs ++ token structs, token offsets
-        # mapped to original coordinates via the last ph_map entry
-        # strictly before them (try_element_at: empty filter -> null -> 0)
-        "cands",
-        F.expr(
-            "concat("
-            " transform(arrays_zip(ph, ph_offs),"
-            "   x -> named_struct('m', x.ph, 'off', x.ph_offs)),"
-            " transform(arrays_zip(toks, tok_roffs),"
-            "   x -> named_struct('m', x.toks,"
-            "     'off', x.tok_roffs + coalesce("
-            "       try_element_at(filter(ph_map, e -> e.roff < x.tok_roffs),"
-            "                      -1).shift, 0))))"
-        ),
+    i = F.coalesce(
+        F.nullif(F.array_position("ms", F.concat(F.lit(_M1), label)), F.lit(0)),
+        F.array_position("ms", label),
     )
-    n_ph = F.size("ph")
-
-    def norm(x):
-        # same reduced norm as the default SQL path (no-op trim/ws
-        # dropped; gazetteer invariant enforced at import)
-        return F.regexp_replace(x, r"[.,;:]+$", "")
-
-    normed = F.transform(
-        "cands",
-        lambda x: F.struct(norm(x["m"]).alias("label"), x["off"].alias("off")),
-    )
-    kept = F.filter(normed, lambda x, i: (i < n_ph) | is_valid_entity_col(x["label"]))
-    t = t.withColumn("kept", kept).withColumn(
-        "klabels", F.expr("transform(kept, x -> x.label)")
-    )
-    # first-occurrence dedup on the label field (array_distinct would
-    # treat same-label/different-offset structs as distinct), then cap
-    deduped = F.expr(
-        "slice(filter(kept, (x, i) -> array_position(klabels, x.label) == i + 1),"
-        f" 1, {MAX_MENTIONS_PER_TURN})"
-    )
-    out = t.select(
-        "conv_id", "turn_idx", "platform", "ts",
-        F.posexplode(deduped).alias("pos", "m"),
-    )
-    return out.select(
-        "conv_id", "turn_idx", "platform", "ts",
-        F.col("m.label").alias("mention"),
-        F.col("m.label").alias("norm_label"),
-        F.concat_ws("|", "conv_id", "turn_idx", "pos").alias("mention_id"),
-        F.col("pos").cast("int").alias("pos"),
-        F.col("m.off").cast("int").alias("off"),
-    )
+    return F.try_element_at("offs", F.nullif(i, F.lit(0)).cast("int"))
 
 
 def extract_mentions(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
-    """turns (post P3/P4/P9 filters) -> mentions DataFrame via the
-    whole-stage-codegen column expressions (extract_mentions_sql).
+    """turns (post P3/P4/P9 filters) -> mentions DataFrame.
 
-    Input must have columns conv_id, turn_idx, platform, ts, text.
-    with_offsets=True adds the `off` char-offset column (triple path;
-    see extract_mentions_sql). The Arrow-batched UDF form,
-    extract_mentions_pandas, is the equivalence reference for phrase
-    hits and offsets.
+    Pure-JVM extraction: ONE trie-regex scan marks phrase hits
+    (_marked_head; the probe in commit 4247e06 measured the former
+    two-scan form 1.26x slower with identical output), marker-pattern
+    scans recover the phrase list and residual tokens, higher-order
+    array ops do normalize/L1-filter/first-occurrence-dedup/cap — all
+    per-row, zero shuffle, no Python workers. Input must have columns
+    conv_id, turn_idx, platform, ts, text. Emits mention = normalized
+    label (the pandas form keeps the raw surface; nothing downstream
+    reads it).
+
+    with_offsets=True adds `off`: each mention's exact 1-based char
+    offset in the lowered truncated text, consumed by
+    triples.build_triples so per-pair cue predicates are chosen by TRUE
+    mention span (the reference picks a predicate per triple,
+    triple_extraction.py:348-374) — re-locating normalized labels
+    downstream cannot find an alias-normalized surface (k8s ->
+    kubernetes) and mislocates a label embedded in another word ('java'
+    inside 'javascript'). The offsets come from the same trie scan
+    (_with_candidate_offsets, _first_offset). The default path carries
+    no offsets: ER never consumes them, and a dead column through the
+    mention shuffle at 10^12 turns is pure cost.
+    extract_mentions_pandas is the equivalence reference for phrase hits
+    and offsets.
     """
-    return extract_mentions_sql(turns, with_offsets=with_offsets)
+    from pyspark.sql import functions as F
+
+    t, deduped = _marked_head(turns)
+    if not with_offsets:
+        return _mention_rows(t.select(
+            "conv_id", "turn_idx", "platform", "ts",
+            F.posexplode(deduped).alias("pos", "norm_label"),
+        ))
+    labelled = F.transform(deduped, lambda x: F.struct(
+        x.alias("norm_label"), _first_offset(x).alias("off")))
+    exploded = _with_candidate_offsets(t).select(
+        "conv_id", "turn_idx", "platform", "ts",
+        F.posexplode(labelled).alias("pos", "m"),
+    ).select("conv_id", "turn_idx", "platform", "ts", "pos", "m.norm_label",
+             F.col("m.off").cast("int").alias("off"))
+    return _mention_rows(exploded, "off")

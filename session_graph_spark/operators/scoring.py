@@ -63,11 +63,10 @@ def band_labels(scored: DataFrame) -> DataFrame:
     )
 
 
-def apply_context_bonus(scored: DataFrame, context: DataFrame,
-                        ctx_weight: float = CTX_WEIGHT) -> DataFrame:
+def apply_context_bonus(scored: DataFrame, context: DataFrame) -> DataFrame:
     """Blend the surrounding-turn-context signal the north star calls for
     into borderline pair scores: for kernel scores in [CTX_BAND_LO,
-    threshold), score = min(kernel + ctx_weight * jaccard(ctx_a, ctx_b),
+    threshold), score = min(kernel + CTX_WEIGHT * jaccard(ctx_a, ctx_b),
     1.0) WHEN the jaccard clears the CTX_MIN_JACC evidence floor
     (essentially identical vectors — partial overlap is chance, not
     evidence) AND the pair is variant-shaped (levenshtein_ratio >=
@@ -96,7 +95,7 @@ def apply_context_bonus(scored: DataFrame, context: DataFrame,
         / F.greatest(F.length("label_a"), F.length("label_b"))
     ) >= F.lit(CTX_VARIANT_LEV)
     bonus = F.when(variant_shaped & (jacc >= F.lit(CTX_MIN_JACC)),
-                   F.lit(ctx_weight) * jacc)
+                   F.lit(CTX_WEIGHT) * jacc)
     return (
         scored.join(F.broadcast(ca), "label_a", "left")
         .join(F.broadcast(cb), "label_b", "left")
@@ -115,8 +114,7 @@ def apply_context_bonus(scored: DataFrame, context: DataFrame,
 
 
 def score_pairs(pairs: DataFrame, decisions: DataFrame | None = None,
-                context_builder=None,
-                ctx_weight: float = CTX_WEIGHT) -> DataFrame:
+                context_builder=None) -> DataFrame:
     """(label_a, label_b) candidates -> (label_a, label_b, score).
 
     `decisions` is the resume cache (same 3-column schema); cached pairs —
@@ -151,7 +149,7 @@ def score_pairs(pairs: DataFrame, decisions: DataFrame | None = None,
         scored = scored.localCheckpoint(eager=True)
         ctx = context_builder(scored)
         if ctx is not None:  # None = empty band, nothing the bonus can flip
-            scored = apply_context_bonus(scored, ctx, ctx_weight)
+            scored = apply_context_bonus(scored, ctx)
     if cached is not None:
         scored = scored.unionByName(cached.select("label_a", "label_b", "score"))
     return scored

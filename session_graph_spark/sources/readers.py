@@ -472,11 +472,3 @@ def claude_message_parents(spark: SparkSession, path: str) -> DataFrame:
     return msgs.join(parents, "parent_uuid", "left").select(
         "conv_id", "uuid", "parent_uuid", "role", "ts", "parent_role", "parent_ts"
     )
-
-
-def union_platforms(*turns: DataFrame) -> DataFrame:
-    """U-op: union normalized platform outputs into the single turns table."""
-    out = turns[0]
-    for t in turns[1:]:
-        out = out.unionByName(t)
-    return out

@@ -60,15 +60,15 @@ def test_extract_batch_finds_planted_and_rejects_noise():
 def test_sql_extraction_equals_pandas(spark):
     """The whole-stage-codegen extraction must decide identically to the
     Arrow-batched pandas form on (conv_id, turn_idx, norm_label, pos)."""
-    from session_graph_spark.operators.extract import (extract_mentions_pandas,
-                                                       extract_mentions_sql)
+    from session_graph_spark.operators.extract import (extract_mentions,
+                                                       extract_mentions_pandas)
 
     turns = corpus.generate_turns(spark, n_convs=25, seed=42)
     base = turns.where(
         (F.col("role") == "assistant") & (F.length(F.trim("text")) >= 30)
     ).select("conv_id", "turn_idx", "platform", "ts", "text")
     cols = ["conv_id", "turn_idx", "norm_label", "pos"]
-    a = sorted(map(tuple, extract_mentions_sql(base).select(*cols).collect()))
+    a = sorted(map(tuple, extract_mentions(base).select(*cols).collect()))
     b = sorted(map(tuple, extract_mentions_pandas(base).select(*cols).collect()))
     assert len(a) > 500
     only_sql = set(a) - set(b)
@@ -112,13 +112,15 @@ def test_offsets_surface_property_random_texts():
     """Property: for ANY text built from tokens, phrases, and punctuation,
     every mention's offset indexes its raw surface in the lowered
     truncated text (pure-pandas path; the SQL form is separately
-    bit-matched against it)."""
+    bit-matched against it). 'xnode.js' puts a gazetteer phrase inside a
+    longer word, where the regex must not match it."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     word = st.text(alphabet="abkz.", min_size=1, max_size=6)
     piece = st.one_of(word, st.sampled_from(
-        ["vs code", "node.js", "fast api", "k8s", "alpha,", "beta.", "  "]))
+        ["vs code", "node.js", "xnode.js", "fast api", "k8s", "alpha,", "beta.",
+         "  "]))
     texts = st.lists(
         st.lists(piece, min_size=1, max_size=25).map(" ".join),
         min_size=1, max_size=8)
@@ -144,12 +146,13 @@ def test_offsets_surface_property_random_texts():
 
 
 def test_sql_offsets_equal_pandas(spark):
-    """The JVM locate-fold offsets must bit-match the pandas find-walk on
-    a corpus slice PLUS handcrafted rows exercising the tricky paths
+    """The JVM offsets must bit-match the pandas match-start walk on a
+    corpus slice PLUS handcrafted rows exercising the tricky paths
     (multiple phrase hits, tokens after phrases, repeated substrings,
-    trailing punctuation)."""
-    from session_graph_spark.operators.extract import (extract_mentions_pandas,
-                                                       extract_mentions_sql)
+    trailing punctuation, a phrase first seen inside a longer word), and
+    every offset must index its label in the lowered text."""
+    from session_graph_spark.operators.extract import (extract_mentions,
+                                                       extract_mentions_pandas)
 
     hard = spark.createDataFrame(
         [
@@ -159,6 +162,9 @@ def test_sql_offsets_equal_pandas(spark):
              "fast api wraps fast api; k8s talks to kubernetes via k8s."),
             ("h3", 1, "p", None, "   leading space  postgres   redis "),
             ("h4", 1, "p", None, "x" * 2000 + " postgres"),  # truncation
+            # 'node.js' first occurs inside 'denode.js', which the
+            # phrase regex skips
+            ("h5", 1, "p", None, "denode.js postgres then node.js with redis"),
         ],
         "conv_id string, turn_idx int, platform string, ts timestamp, text string",
     )
@@ -167,7 +173,7 @@ def test_sql_offsets_equal_pandas(spark):
         (F.col("role") == "assistant") & (F.length(F.trim("text")) >= 30)
     ).select("conv_id", "turn_idx", "platform", "ts", "text").unionByName(hard)
     cols = ["conv_id", "turn_idx", "norm_label", "pos", "off"]
-    a = sorted(map(tuple, extract_mentions_sql(base, with_offsets=True)
+    a = sorted(map(tuple, extract_mentions(base, with_offsets=True)
                    .select(*cols).collect()))
     b = sorted(map(tuple, extract_mentions_pandas(base, with_offsets=True)
                    .select(*cols).collect()))
@@ -177,19 +183,41 @@ def test_sql_offsets_equal_pandas(spark):
     assert not only_sql and not only_pd, (
         f"sql-only: {sorted(only_sql)[:10]} pandas-only: {sorted(only_pd)[:10]}"
     )
+    h5 = {r[2]: r[4] for r in a if r[0] == "h5"}
+    assert (h5["node.js"], h5["postgres"], h5["then"]) == (25, 11, 20), h5
+    texts = {(r.conv_id, r.turn_idx): r.text.lower()
+             for r in base.select("conv_id", "turn_idx", "text").collect()}
+    for conv_id, turn_idx, label, _, off in a:
+        assert texts[(conv_id, turn_idx)][off - 1:].startswith(label), \
+            (conv_id, turn_idx, label, off)
+
+
+def test_offsets_path_scans_trie_once(spark):
+    """with_offsets reuses _marked_head: the executed plan evaluates the
+    trie phrase pattern exactly once."""
+    from session_graph_spark.operators.extract import _PHRASE_RE, extract_mentions
+
+    base = spark.createDataFrame(
+        [("c", 1, "p", None, "vs code runs node.js with postgres")],
+        "conv_id string, turn_idx int, platform string, ts timestamp, text string",
+    )
+    df = extract_mentions(base, with_offsets=True)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(_PHRASE_RE.pattern) == 1
 
 
 def test_offset_and_default_paths_agree_on_mentions(spark):
     """with_offsets must never change WHICH mentions are extracted — only
     add the off column (the default ER path keeps the round-5 plan)."""
-    from session_graph_spark.operators.extract import extract_mentions_sql
+    from session_graph_spark.operators.extract import extract_mentions
 
     turns = corpus.generate_turns(spark, n_convs=10, seed=11)
     base = turns.where(F.col("role") == "assistant").select(
         "conv_id", "turn_idx", "platform", "ts", "text")
     cols = ["conv_id", "turn_idx", "norm_label", "pos"]
-    plain = sorted(map(tuple, extract_mentions_sql(base).select(*cols).collect()))
-    offs = sorted(map(tuple, extract_mentions_sql(base, with_offsets=True)
+    plain = sorted(map(tuple, extract_mentions(base).select(*cols).collect()))
+    offs = sorted(map(tuple, extract_mentions(base, with_offsets=True)
                       .select(*cols).collect()))
     assert plain == offs
 
