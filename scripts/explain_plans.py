@@ -11,10 +11,12 @@ properties that matter at 100TB:
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def explain_str(df, mode: str = "formatted") -> str:
@@ -304,7 +306,7 @@ def main() -> None:
                 failures.append((title, needle))
         out.append(f"\n## {title}\n\nchecks: {', '.join(status)}\n\n```\n{plan}\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written;", "FAILURES: " + str(failures) if failures else "all checks ok")
     spark.stop()

@@ -17,6 +17,7 @@ Mirrors the reference's three resume mechanisms:
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from collections.abc import Callable
 from pathlib import Path
@@ -36,8 +37,9 @@ class StageStore:
       it once consumers have severed lineage. Keys are never compared,
       so `fingerprint` returns "" without scanning anything.
     - root set (parquet policy): reuse `root/<name>` when the manifest
-      records the same input key, else compute, write parquet, read it
-      back and record the stage in `root/manifest.json`.
+      records the same input key, else compute, write parquet to a
+      staging dir, swap it in as `root/<name>`, read it back and record
+      the stage in `root/manifest.json`.
 
     Either way `manifest[name]` holds the stage's row count and wall
     time, which resolve() returns as its metrics."""
@@ -86,16 +88,27 @@ class StageStore:
             self.manifest[name] = {"rows": int(rows(out) or 0),
                                    "wall_sec": round(time.time() - t0, 3)}
             return out
-        out.write.mode("overwrite").parquet(str(path))
-        out = self.spark.read.parquet(str(path))
+        # write beside the stage dir, then swap it in: `compute` may scan
+        # this stage's current output (decisions read from this root's
+        # own `scored`), which an in-place overwrite deletes under the
+        # running write job. The manifest drops the entry before the old
+        # dir goes and names the new key only once its data is in place,
+        # so it never points at a missing or foreign directory
+        staging = path.with_name(f"{name}.staging")
+        out.write.mode("overwrite").parquet(str(staging))
+        n = int(rows(self.spark.read.parquet(str(staging))) or 0)
+        if self.manifest.pop(name, None) is not None:
+            self._flush()
+        shutil.rmtree(path, ignore_errors=True)
+        staging.rename(path)
         self.manifest[name] = {
             "input_fp": key,
             "path": str(path),
-            "rows": int(rows(out) or 0),
+            "rows": n,
             "wall_sec": round(time.time() - t0, 3),
         }
         self._flush()
-        return out
+        return self.spark.read.parquet(str(path))
 
     def release(self, blocking: bool = False) -> None:
         """Drop the memory policy's cached stages."""

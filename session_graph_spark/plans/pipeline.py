@@ -81,7 +81,7 @@ def prepare_turns(turns: DataFrame) -> DataFrame:
     return t
 
 
-def _extraction_input(turns: DataFrame, dedup_turns: bool) -> DataFrame:
+def _extraction_input(turns: DataFrame, dedup_turns: bool = False) -> DataFrame:
     """P3/P4 row filters + the five-column projection extraction reads."""
     base = turns.where(Flt.assistant_only() & Flt.min_length_filter())
     if "platform" not in base.columns:
@@ -118,15 +118,14 @@ def mentions_from_turns(turns: DataFrame, dedup_turns: bool = False,
                             with_offsets=with_offsets)
 
 
-def mention_arrays_from_turns(turns: DataFrame,
-                              dedup_turns: bool = False) -> DataFrame:
+def mention_arrays_from_turns(turns: DataFrame) -> DataFrame:
     """Same input filters as mentions_from_turns, but stopping at the
     per-turn mention-label ARRAY (extract.extract_mention_arrays) — the
     form resolve()'s mentions stage materializes: one row per turn
     instead of one per mention, no per-mention conv_id/mention_id
     duplication in the cached or written bytes. `explode_mention_arrays`
     on this output is expression-identical to mentions_from_turns."""
-    return extract_mention_arrays(_extraction_input(turns, dedup_turns))
+    return extract_mention_arrays(_extraction_input(turns))
 
 
 def normalized_labels(

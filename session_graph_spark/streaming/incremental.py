@@ -5,16 +5,15 @@ triplestore) maps to incremental batch over table snapshots:
 
 - new transcript rows land in the turns table (Iceberg append in prod;
   a parquet directory here);
-- `incremental_resolve` reads only conversations whose content hash is
+- `IncrementalRunner.run` reads only conversations whose content hash is
   not in the processed-watermarks table (exactly-once effect via
   idempotent dedupe keys, ST3), runs the ER pipeline scoped to the
   changed conv_ids, and merges results;
 - failures quarantine instead of poisoning the run (DLQ analog, ST2).
 
-A Structured Streaming variant (`stream_turns`) shows the same DAG under
-readStream + foreachBatch + Trigger.AvailableNow for deployments that
-want the streaming runtime; the batch path is the primary one (the north
-rule requires no event-time windowing).
+The batch path is the only ER path (the north rule requires no
+event-time windowing); Structured Streaming under Trigger.AvailableNow
+(ST1) is exercised by the driver's `q_streaming_state` query.
 """
 
 from __future__ import annotations
@@ -23,6 +22,7 @@ import json
 import os
 import shutil
 import warnings
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,8 +57,8 @@ class IncrementalRunner:
         # (at 10^12 turns: thousands, not 16 — it only changes the
         # directory fan-out, not the plan shape)
         self.n_parts = n_parts
-        # fail fast if any existing state table was written under a
-        # different n_parts: part = pmod(xxhash64(conv_id), n_parts), so a
+        # fail fast if any existing state table is in the pre-manifest
+        # layout or was written under a different n_parts: part = pmod(xxhash64(conv_id), n_parts), so a
         # mismatched runner would compute different partitions for the
         # same conv_id and merge around stale rows it can never see
         for p in (self._wm_path, self._clusters_path, self._dlq_path):
@@ -108,67 +108,21 @@ class IncrementalRunner:
     def _load_manifest(self, path: str) -> dict | None:
         f = Path(path) / "_MANIFEST.json"
         if not f.exists():
-            # a manifest-less dir that nevertheless holds flat part=P
-            # data is the pre-generation (swap-protocol) layout: migrate
-            # it in place (renames into gen=0 + one manifest commit)
-            # instead of silently treating committed state as empty —
-            # which would reprocess every conversation and orphan the
-            # old rows forever
+            # flat part=P dirs are the pre-manifest (swap-protocol) layout
+            # and gen=0 only ever held its in-place migration: refuse both
+            # rather than read committed state as empty, which would
+            # reprocess every conversation and orphan the old rows. gen>=1
+            # dirs alone are a crashed first merge, which the next merge's
+            # pre-write GC rolls back
             root = Path(path)
-            legacy = sorted(root.glob("part=*")) if root.exists() else []
-            gen_dir = root / "gen=0"
-            # IDEMPOTENT RESTART of a crashed earlier migration: the
-            # rename loop below moves partitions one by one, so a crash
-            # mid-loop leaves some dirs already inside gen=0 with no
-            # manifest. Those hold COMMITTED rows — they must be unioned
-            # into this migration's manifest, or the committed manifest
-            # would omit them and the next merge's pre-write GC would
-            # silently delete them (they sit at g=0, below the committed
-            # gen, so the crashed-write heuristic treats them as routine
-            # post-commit leftovers).
-            moved = sorted(gen_dir.glob("part=*")) if gen_dir.exists() else []
-            if not legacy and not moved:
-                return None
-            # the legacy layout never recorded n_parts; a store written
-            # under a LARGER n_parts is detectable (some index out of
-            # range) and must fail fast — migrating it would hash
-            # conv_ids to the wrong partitions on every later merge
-            # (exactly the stale-row corruption the manifest's n_parts
-            # pin exists to prevent). A smaller-n_parts store whose
-            # indices all happen to fit is undetectable by construction;
-            # that is why the manifest pins n_parts going forward.
-            bad = [d.name for d in legacy + moved
-                   if not 0 <= int(d.name.split("=", 1)[1]) < self.n_parts]
-            if bad:
+            old = sorted(d.name for d in (*root.glob("part=*"), *root.glob("gen=0")))
+            if old:
                 raise ValueError(
-                    f"state table {path}: pre-manifest layout has "
-                    f"partition dirs {bad} outside n_parts="
-                    f"{self.n_parts}; it was written under a different "
-                    "n_parts. Reopen with the original n_parts (or "
-                    "rewrite the state dir).")
-            warnings.warn(
-                f"state table {path}: migrating pre-manifest layout "
-                f"({len(legacy)} flat partition dirs"
-                + (f" + {len(moved)} already moved by a crashed earlier "
-                   "migration" if moved else "")
-                + ") to the generation-pointer format", stacklevel=2)
-            gen_dir.mkdir(exist_ok=True)
-            parts = {d.name.split("=", 1)[1]: 0 for d in moved}
-            for d in legacy:
-                if (gen_dir / d.name).exists():
-                    # cannot arise from a crash (rename is atomic: a dir
-                    # is either flat or moved, never both) — refuse to
-                    # guess which copy is current
-                    raise RuntimeError(
-                        f"state table {path}: partition {d.name} exists "
-                        "both flat and under gen=0; ambiguous layout, "
-                        "manual repair required")
-                d.rename(gen_dir / d.name)
-                parts[d.name.split("=", 1)[1]] = 0
-            man = {"version": 1, "n_parts": self.n_parts, "gen": 0,
-                   "parts": {k: parts[k] for k in sorted(parts, key=int)}}
-            self._commit_manifest(path, man)
-            return man
+                    f"state table {path} has no _MANIFEST.json but holds "
+                    f"pre-manifest layout dirs {old}; that layout is no "
+                    "longer read. Rewrite the state dir: re-run the "
+                    "corpus into an empty state_dir.")
+            return None
         man = json.loads(f.read_text())
         if man["n_parts"] != self.n_parts:
             raise ValueError(
@@ -292,79 +246,87 @@ class IncrementalRunner:
         else:
             todo = wm
         todo = todo.cache()
-        if todo.count() == 0:
-            # steady-state no-op path needs the same cache hygiene as the
-            # other exits: a service polling an unchanged corpus would
-            # otherwise accumulate two cached frames per poll
+        try:
+            if todo.count() == 0:
+                return self.spark.createDataFrame([], self._STATE_SCHEMAS["clusters"])
+            batch_turns = turns.join(F.broadcast(todo.select("conv_id")),
+                                     "conv_id", "left_semi")
+            try:
+                out, bad = self._resolve_severed(batch_turns), None
+            except Exception:  # noqa: BLE001 - isolate the poison conversations
+                out, bad = self._run_with_quarantine(turns, todo)
+            self._commit(out, bad, todo)
+            return out
+        finally:
+            # per-batch cache hygiene on every exit, the no-op poll of an
+            # unchanged corpus included: a long-running service would
+            # otherwise accumulate two cached frames per batch
             wm.unpersist()
             todo.unpersist()
-            return self.spark.createDataFrame(
-                [], "conv_id string, canon_label string, cluster_id string"
-            )
-        batch_turns = turns.join(F.broadcast(todo.select("conv_id")), "conv_id", "left_semi")
+
+    def _resolve_severed(self, turns: DataFrame) -> DataFrame:
+        """Resolve `turns` and return its (conv_id, canon_label,
+        cluster_id) assignment with lineage severed, releasing resolve()'s
+        cached stages. Severing comes BEFORE any state table is merged:
+        the returned DataFrame's plan must not re-read a parquet path the
+        commit is about to overwrite (the overwrite invalidates dependent
+        caches and a later action would re-plan against the new
+        watermarks). The eager checkpoint is also the action that
+        surfaces lazy failures (cache-evicted recompute of the extraction
+        UDF) inside the caller's quarantine guard."""
+        res = self._resolve(turns)
         try:
-            res = self._resolve(batch_turns)
-            # sever lineage BEFORE updating the watermark table: the
-            # returned DataFrame's plan must not re-read a parquet path
-            # this method is about to overwrite (the overwrite
-            # invalidates dependent caches and a later action would
-            # re-plan against the new watermarks). The eager checkpoint
-            # ALSO runs inside the quarantine guard: a poison
-            # conversation whose failure only surfaces at this action
-            # (lazy plans, cache-evicted recompute of the extraction
-            # UDF) must still bisect into the DLQ, not fail the batch
-            out = res.mention_clusters.select(
+            return res.mention_clusters.select(
                 "conv_id", "canon_label", "cluster_id"
             ).localCheckpoint(eager=True)
-        except Exception:  # noqa: BLE001 - isolate the poison conversations
-            out = self._run_with_quarantine(turns, todo)
-            wm.unpersist()
-            todo.unpersist()
-            return out
-        # lineage is severed: drop this batch's cached stages so a
-        # long-running service doesn't accumulate one cache set per batch
-        res.unpersist()
-        # merge-by-conv_id, not blind append: a *changed* conversation's
-        # old assignment rows must be replaced or readers of the clusters
-        # table see stale duplicates forever
-        self._merge_overwrite(self._clusters_path, out, todo.select("conv_id"))
-        # a conversation that processed cleanly leaves the dead-letter
-        # table (its content changed since it was quarantined). This MUST
-        # run before the watermark merge below: todo's cached plan reads
-        # the watermark table, and rewriting it must not race todo's
-        # recompute if the cache is ever evicted
-        if self.quarantined() is not None:
-            self._merge_overwrite(
-                self._dlq_path,
-                self.spark.createDataFrame(
-                    [], "conv_id string, content_hash string, error string"
-                ),
-                todo.select("conv_id"),
-            )
-        # watermark merge keeps the NEW hash for changed conv_ids: the
-        # partition-scoped MERGE replaces exactly the todo conversations'
-        # rows and leaves every other partition's files untouched
-        self._merge_overwrite(self._wm_path, todo, todo.select("conv_id"))
-        # per-batch cache hygiene (long-running service): this batch's
-        # wm/todo caches are dead weight once the state tables are merged
-        wm.unpersist()
-        todo.unpersist()
-        return out
+        finally:
+            res.unpersist()
 
-    def _run_with_quarantine(self, turns: DataFrame,
-                             todo: DataFrame) -> DataFrame:
+    def _commit(self, out: DataFrame, quarantined_rows: list[tuple[str, str]] | None,
+                todo: DataFrame) -> None:
+        """The batch's one commit sequence: clusters, then dead-letter
+        table, then watermarks, each a merge that replaces exactly the
+        todo conversations' rows. `quarantined_rows` are the batch's
+        (conv_id, error) poison conversations; None (a clean batch) only
+        heals a dead-letter table that already exists, so a store that
+        never quarantined has none."""
+        replaced = todo.select("conv_id")
+        # merge-by-conv_id, not blind append: a *changed* conversation's
+        # old assignment rows must be replaced (poison ones dropped) or
+        # readers of the clusters table see stale rows forever
+        self._merge_overwrite(self._clusters_path, out, replaced)
+        # dead-letter MERGE: the batch's healthy convs leave the DLQ,
+        # poison ones carry the content hash that failed. This MUST run
+        # before the watermark merge below: todo's cached plan reads the
+        # watermark table, and rewriting it must not race todo's
+        # recompute if the cache is ever evicted
+        if quarantined_rows is not None or self.quarantined() is not None:
+            add = self.spark.createDataFrame(
+                quarantined_rows or [], "conv_id string, error string"
+            ).join(todo.select("conv_id", "content_hash"), "conv_id").select(
+                "conv_id", "content_hash", "error"
+            )
+            self._merge_overwrite(self._dlq_path, add, replaced)
+        # watermark EVERY todo conv (poison included: quarantined content
+        # is not retried until its hash changes); the partition-scoped
+        # merge keeps the NEW hash for changed conv_ids and leaves every
+        # other partition's files untouched
+        self._merge_overwrite(self._wm_path, todo, replaced)
+
+    def _run_with_quarantine(self, turns: DataFrame, todo: DataFrame
+                             ) -> tuple[DataFrame, list[tuple[str, str]]]:
         """ST2 failure isolation: bisect the failing batch down to the
         poison conversations, then re-resolve ALL healthy conversations
         together in one final pass — so labels that co-cluster across
         bisection halves (typo variants spanning conversations) get
         exactly the cluster ids the happy path would have produced.
-        Poison conversations land in the quarantine table with their
-        error, get watermarked (so they are NOT retried until their
-        content changes), and their stale cluster rows are dropped rather
-        than left to serve outdated content. Driver-side recursion only
-        runs on the failure path and is bounded by the batch's
-        conversation count; the bisection probes discard their outputs
-        (they exist only to locate the poison)."""
+        Returns that assignment and the (conv_id, error) poison rows for
+        `_commit`, which quarantines and watermarks them (so they are NOT
+        retried until their content changes) and drops their stale
+        cluster rows rather than leaving them to serve outdated content.
+        Driver-side recursion only runs on the failure path and is
+        bounded by the batch's conversation count; the bisection probes
+        discard their outputs (they exist only to locate the poison)."""
         conv_ids = sorted(
             r["conv_id"] for r in todo.select("conv_id").distinct().collect()
         )
@@ -380,12 +342,7 @@ class IncrementalRunner:
 
         def probe(ids: list[str]) -> None:
             try:
-                res = self._resolve(subset_of(ids))
-                # force execution so lazily-surfacing failures count
-                res.mention_clusters.select(
-                    "conv_id", "canon_label", "cluster_id"
-                ).localCheckpoint(eager=True)
-                res.unpersist()
+                self._resolve_severed(subset_of(ids))
             except Exception as exc:  # noqa: BLE001
                 if len(ids) == 1:
                     bad.append((ids[0], str(exc)[:500]))
@@ -396,24 +353,14 @@ class IncrementalRunner:
 
         probe(conv_ids)
 
-        def resolve_committed(ids: list[str]) -> DataFrame:
-            res = self._resolve(subset_of(ids))
-            chk = res.mention_clusters.select(
-                "conv_id", "canon_label", "cluster_id"
-            ).localCheckpoint(eager=True)
-            res.unpersist()
-            return chk
-
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, canon_label string, cluster_id string"
-        )
         healthy = [c for c in conv_ids if c not in {b for b, _ in bad}]
+        outs: list[DataFrame] = []
         if healthy:
             # one combined resolve over every healthy conversation: the
             # committed assignment is identical to a batch that never
             # contained the poison conversations
             try:
-                out = resolve_committed(healthy)
+                outs.append(self._resolve_severed(subset_of(healthy)))
             except Exception:  # noqa: BLE001 - batch-SCALE failure
                 # the combined set failed even though every conversation
                 # passed its probe (memory/scale or cross-conversation
@@ -423,35 +370,14 @@ class IncrementalRunner:
                 # are lost for this batch; the next content change
                 # re-resolves them together), quarantining any conv that
                 # fails even solo
-                parts_out = []
                 for c in healthy:
                     try:
-                        parts_out.append(resolve_committed([c]))
+                        outs.append(self._resolve_severed(subset_of([c])))
                     except Exception as exc:  # noqa: BLE001
                         bad.append((c, str(exc)[:500]))
-                out = empty
-                for p_df in parts_out:
-                    out = out.unionByName(p_df)
-        else:
-            out = empty
-        # replaced set = ALL todo convs: healthy ones get fresh rows,
-        # poison ones get their stale rows dropped
-        self._merge_overwrite(self._clusters_path, out, todo.select("conv_id"))
-
-        # dead-letter MERGE: replace this batch's convs' rows with the
-        # fresh poison rows (healthy convs leave the DLQ, poison ones
-        # carry the content hash that failed)
-        add = self.spark.createDataFrame(
-            bad, "conv_id string, error string"
-        ).join(todo.select("conv_id", "content_hash"), "conv_id").select(
-            "conv_id", "content_hash", "error"
-        )
-        self._merge_overwrite(self._dlq_path, add, todo.select("conv_id"))
-
-        # watermark EVERY todo conv (incl. poison): quarantined content is
-        # not retried until the conversation's hash changes
-        self._merge_overwrite(self._wm_path, todo, todo.select("conv_id"))
-        return out
+        if not outs:
+            return self.spark.createDataFrame([], self._STATE_SCHEMAS["clusters"]), bad
+        return reduce(DataFrame.unionByName, outs), bad
 
     def _with_part(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -528,17 +454,3 @@ class IncrementalRunner:
         # plan!) and re-process the same conversations forever
         self.spark.catalog.refreshByPath(path)
 
-
-def stream_turns(spark: SparkSession, input_dir: str, schema: str,
-                 checkpoint_dir: str, process_batch) -> "object":
-    """Structured Streaming wrapper: file-source stream of turn rows,
-    foreachBatch(process_batch), Trigger.AvailableNow (drain-and-stop)."""
-    stream = (
-        spark.readStream.schema(schema).parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

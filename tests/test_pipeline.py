@@ -192,6 +192,37 @@ def test_checkpoint_recomputes_exploded_mentions_stage(spark, tmp_path):
     assert _rows(res.mentions) == _rows(old)
 
 
+def test_checkpoint_decisions_from_own_scored_stage(spark, tmp_path):
+    """Decisions read from the checkpoint dir's own `scored` stage: the
+    rewrite of that stage must not delete the files it is reading, the
+    clusters must equal the first run's, and the manifest must never name
+    a stage directory holding other data or none — a later plain resolve
+    on the same dir reads every stage."""
+    import json
+
+    turns = corpus.generate_turns(spark, n_convs=60, seed=3)
+    ck = tmp_path / "run"
+    r1 = resolve(spark, turns, checkpoint_dir=str(ck))
+    want = {name: _rows(getattr(r1, name))
+            for name in ("labels", "pairs_scored", "clusters", "mention_clusters")}
+    wall1 = {k: r1.metrics[k]["wall_sec"] for k in ("mentions", "labels", "pairs")}
+
+    r2 = resolve(spark, turns, checkpoint_dir=str(ck),
+                 decisions=spark.read.parquet(str(ck / "scored")))
+    assert _rows(r2.clusters) == want["clusters"]
+
+    r3 = resolve(spark, turns, checkpoint_dir=str(ck))
+    for name, rows in want.items():
+        assert _rows(getattr(r3, name)) == rows, name
+    # the unchanged upstream stages were read back, not recomputed
+    assert {k: r3.metrics[k]["wall_sec"] for k in wall1} == wall1
+    manifest = json.loads((ck / "manifest.json").read_text())
+    assert set(manifest) == {"mentions", "labels", "pairs", "scored", "clusters"}
+    for name in ("labels", "pairs", "scored", "clusters"):
+        assert spark.read.parquet(manifest[name]["path"]).count() == manifest[name]["rows"], name
+    assert not list(ck.glob("*.staging"))
+
+
 def test_checkpoint_invalidates_on_config_change(spark, tmp_path):
     """Stage keys fold in config: re-running over the same checkpoint dir
     with a different threshold or min_sessions must NOT return the stale

@@ -291,6 +291,8 @@ def test_incremental_runner(spark, tmp_path):
     runner = IncrementalRunner(spark, str(tmp_path / "state"))
     out1 = runner.run(turns1)
     assert out1.count() > 0
+    # a clean batch creates no dead-letter table
+    assert runner.quarantined() is None
 
     # same input again: watermark skip -> nothing processed
     out2 = runner.run(turns1)
@@ -629,39 +631,6 @@ def test_state_store_commit_is_crash_atomic(spark, tmp_path):
     assert set(gens) == man_gens
 
 
-def test_state_store_legacy_layout_migrates(spark, tmp_path):
-    """A pre-manifest state dir (flat part=P layout from the old swap
-    protocol) must not read as empty: opening it migrates the data into
-    gen=0 with one manifest commit (warning emitted), preserving every
-    row."""
-    import warnings as _warnings
-
-    from session_graph_spark.streaming.incremental import IncrementalRunner
-    from pyspark.sql import functions as _F
-
-    path = str(tmp_path / "state" / "clusters")
-    df = spark.createDataFrame(
-        [(f"conv-{i}", f"l{i}", f"c{i}") for i in range(6)],
-        "conv_id string, canon_label string, cluster_id string")
-    df.withColumn("part", _F.pmod(_F.xxhash64("conv_id"), _F.lit(4))) \
-        .write.partitionBy("part").parquet(path)
-    assert not (tmp_path / "state" / "clusters" / "_MANIFEST.json").exists()
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        runner = IncrementalRunner(spark, str(tmp_path / "state"), n_parts=4)
-        got = sorted(map(tuple, runner.clusters().collect()))
-    assert any("migrating pre-manifest layout" in str(w.message) for w in caught)
-    assert got == sorted(map(tuple, df.collect()))
-    # post-migration the table merges normally
-    upd = spark.createDataFrame(
-        [("conv-0", "lx", "cx")],
-        "conv_id string, canon_label string, cluster_id string")
-    runner._merge_overwrite(path, upd, upd.select("conv_id"))
-    after = {r["conv_id"]: r["canon_label"] for r in runner.clusters().collect()}
-    assert after["conv-0"] == "lx" and len(after) == 6
-
-
 def _write_legacy_layout(spark, path: str, n_rows: int = 6, n_parts: int = 4):
     from pyspark.sql import functions as _F
 
@@ -673,79 +642,55 @@ def _write_legacy_layout(spark, path: str, n_rows: int = 6, n_parts: int = 4):
     return df
 
 
-def test_state_store_legacy_migration_crash_mid_loop_resumes(spark, tmp_path):
-    """Kill-mid-migration: the migration renames flat part=P dirs into
-    gen=0 one by one before committing the manifest. A crash mid-loop
-    leaves SOME partitions already inside gen=0 with no manifest; the
-    restarted migration must union those into its manifest — the round-5
-    code saw only the still-flat dirs, so the committed manifest omitted
-    the moved partitions and the next merge's pre-write GC silently
-    deleted committed rows."""
-    import warnings as _warnings
+@pytest.mark.parametrize("layout", ["flat", "gen0", "both"])
+def test_state_store_pre_manifest_layout_rejected(spark, tmp_path, layout):
+    """A manifest-less table dir holding flat part=P dirs (the pre-manifest
+    swap-protocol layout), gen=0 (where its removed in-place migration
+    moved them) or both must be refused at open with ValueError, and
+    every file under the state dir keeps its path and bytes. A gen=0
+    that a manifest references is ordinary committed state."""
+    import json as _json
 
     from session_graph_spark.streaming.incremental import IncrementalRunner
 
-    path = str(tmp_path / "state" / "clusters")
-    df = _write_legacy_layout(spark, path)
-    all_rows = sorted(map(tuple, df.collect()))
-
-    # simulate the crash: move half the flat dirs into gen=0 exactly as
-    # the migration loop would, then "die" before the manifest commit
-    flat = sorted((tmp_path / "state" / "clusters").glob("part=*"))
+    state = tmp_path / "state"
+    table = state / "clusters"
+    df = _write_legacy_layout(spark, str(table))
+    flat = sorted(table.glob("part=*"))
     assert len(flat) >= 2, "fixture needs >= 2 partitions"
-    gen0 = tmp_path / "state" / "clusters" / "gen=0"
-    gen0.mkdir()
-    for d in flat[: len(flat) // 2]:
-        d.rename(gen0 / d.name)
-    assert not (tmp_path / "state" / "clusters" / "_MANIFEST.json").exists()
+    if layout != "flat":
+        (table / "gen=0").mkdir()
+        for d in flat if layout == "gen0" else flat[: len(flat) // 2]:
+            d.rename(table / "gen=0" / d.name)
 
-    with _warnings.catch_warnings(record=True):
-        _warnings.simplefilter("always")
-        runner = IncrementalRunner(spark, str(tmp_path / "state"), n_parts=4)
-        got = sorted(map(tuple, runner.clusters().collect()))
-    assert got == all_rows, "crashed migration lost committed rows on reopen"
+    def snapshot():
+        return {str(f.relative_to(state)): f.read_bytes() if f.is_file() else None
+                for f in state.rglob("*")}
 
-    # the next merge (whose pre-write GC pass is where round 5 lost the
-    # moved partitions) must still see every committed row afterwards
-    upd = spark.createDataFrame(
-        [("conv-0", "lx", "cx")],
-        "conv_id string, canon_label string, cluster_id string")
-    runner._merge_overwrite(path, upd, upd.select("conv_id"))
-    after = {r["conv_id"]: r["canon_label"] for r in runner.clusters().collect()}
-    assert len(after) == 6, "post-migration merge GC'd committed partitions"
-    assert after["conv-0"] == "lx"
-    assert after["conv-5"] == "l5"
+    before = snapshot()
+    with pytest.raises(ValueError, match="pre-manifest layout"):
+        IncrementalRunner(spark, str(state), n_parts=4)
+    assert snapshot() == before
 
-
-def test_state_store_legacy_migration_crash_after_all_renames(spark, tmp_path):
-    """Crash AFTER every rename but BEFORE the manifest commit: no flat
-    part=P dirs remain, so the round-5 migration glob saw nothing and
-    returned None — committed state read as empty. The restart must
-    recover the gen=0 dirs."""
-    import warnings as _warnings
-
-    from session_graph_spark.streaming.incremental import IncrementalRunner
-
-    path = str(tmp_path / "state" / "clusters")
-    df = _write_legacy_layout(spark, path)
-    gen0 = tmp_path / "state" / "clusters" / "gen=0"
-    gen0.mkdir()
-    for d in sorted((tmp_path / "state" / "clusters").glob("part=*")):
-        d.rename(gen0 / d.name)
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        runner = IncrementalRunner(spark, str(tmp_path / "state"), n_parts=4)
-        got = sorted(map(tuple, runner.clusters().collect()))
-    assert any("migrating pre-manifest layout" in str(w.message) for w in caught)
-    assert got == sorted(map(tuple, df.collect()))
+    if layout == "gen0":
+        parts = {d.name.split("=", 1)[1]: 0 for d in (table / "gen=0").glob("part=*")}
+        (table / "_MANIFEST.json").write_text(_json.dumps(
+            {"version": 1, "n_parts": 4, "gen": 0, "parts": parts}))
+        runner = IncrementalRunner(spark, str(state), n_parts=4)
+        assert sorted(map(tuple, runner.clusters().collect())) == \
+            sorted(map(tuple, df.collect()))
+        upd = spark.createDataFrame(
+            [("conv-0", "lx", "cx")],
+            "conv_id string, canon_label string, cluster_id string")
+        runner._merge_overwrite(str(table), upd, upd.select("conv_id"))
+        after = {r["conv_id"]: r["canon_label"] for r in runner.clusters().collect()}
+        assert after["conv-0"] == "lx" and after["conv-5"] == "l5" and len(after) == 6
 
 
 def test_state_store_legacy_layout_rejects_wrong_n_parts(spark, tmp_path):
     """A pre-manifest store written under a LARGER n_parts (some flat
-    part index out of range) must fail fast instead of migrating —
-    later merges would hash conv_ids to the wrong partitions and leave
-    stale rows behind."""
+    part index out of range) is refused like any pre-manifest layout —
+    opening it must never hash conv_ids to the wrong partitions."""
     from session_graph_spark.streaming.incremental import IncrementalRunner
 
     path = str(tmp_path / "state" / "clusters")
@@ -753,8 +698,8 @@ def test_state_store_legacy_layout_rejects_wrong_n_parts(spark, tmp_path):
     # a partition index only an n_parts > 4 store could produce
     (tmp_path / "state" / "clusters" / "part=7").mkdir()
 
-    # the constructor's fail-fast manifest pass hits the migration check
-    with pytest.raises(ValueError, match="outside n_parts"):
+    # the constructor's fail-fast manifest pass refuses the layout
+    with pytest.raises(ValueError, match="pre-manifest layout.*part=7"):
         IncrementalRunner(spark, str(tmp_path / "state"), n_parts=4)
 
 
