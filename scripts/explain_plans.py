@@ -6,6 +6,8 @@ properties that matter at 100TB:
 - the alias/vocab dimension joins are BroadcastHashJoin,
 - relational stages run inside WholeStageCodegen,
 - the blocking self-join is an equi-join (no cartesian).
+
+Usage: python scripts/explain_plans.py [SF_DIR]   (default: sf0.01 testdata)
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ def main() -> None:
     spark = get_spark(app_name="plans", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.01"
+    if len(sys.argv) > 1:  # scale-factor directory, as check_oracles.py takes it
+        sf = sys.argv[1]
 
     sections: list[tuple[str, str, list[str]]] = []
 

@@ -1,4 +1,5 @@
-"""Blocking: candidate generation for pairwise scoring (SURVEY.md §2.10, M2).
+"""Blocking: candidate generation for pairwise scoring (SURVEY.md §2.10, M2),
+and the package's one MinHash-LSH candidate join.
 
 Two channels, unioned:
 
@@ -13,22 +14,26 @@ Two channels, unioned:
 Candidate pairs are generated over **distinct labels**, never mention
 occurrences — a hot label ("python") may have 10^9 occurrences but is one
 row here, which is what makes this survive 10^12 turns. Occurrence-level
-skew is handled where occurrences join back to clusters (AQE skew join +
-optional salting, see `with_salt`).
+skew is handled where occurrences join back to clusters (AQE skew join).
 
-Runaway blocks (a band bucket collecting > MAX_BLOCK_SIZE labels) are
+The LSH pieces are shared with the document dedup operators (dedup.py):
+`minhash_signatures` is the one Arrow kernel (value -> signature array;
+each caller brings its own gram function and hash offset), `band_keys`
+bands a signature in the JVM, and `bucket_pairs` is the one salted
+same-bucket self-join. Runaway buckets (> MAX_BLOCK_SIZE members) are
 salted into bounded sub-buckets rather than generating O(n^2) pairs.
 """
 
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 # 32 bands of 2 rows: a pair with trigram-Jaccard s collides with
 # probability 1-(1-s^2)^32 — >= 0.94 at s=0.4 (close typos), < 0.08 for
@@ -37,11 +42,7 @@ from pyspark.sql import functions as F
 N_HASHES = 64
 BANDS = 32
 _MERSENNE = (1 << 61) - 1
-# fixed odd multipliers/offsets -> deterministic across runs and machines
-_A = np.array([(2 * i + 1) * 0x9E3779B97F4A7C15 % _MERSENNE for i in range(1, N_HASHES + 1)], dtype=np.uint64)
-_B = np.array([(i * 0xC2B2AE3D27D4EB4F + 17) % _MERSENNE for i in range(1, N_HASHES + 1)], dtype=np.uint64)
-
-MAX_BLOCK_SIZE = 64  # distinct labels per LSH sub-bucket (salting bound)
+MAX_BLOCK_SIZE = 64  # members per LSH sub-bucket (salting bound)
 
 
 def _trigram_hashes(label: str) -> np.ndarray:
@@ -50,45 +51,84 @@ def _trigram_hashes(label: str) -> np.ndarray:
     return np.array([zlib.crc32(g.encode("utf-8")) for g in grams], dtype=np.uint64)
 
 
-def minhash_bands_batch(labels: pd.Series) -> pd.DataFrame:
-    """label -> rows (label, band_idx, band_key)."""
-    rows_label: list[str] = []
-    rows_band: list[int] = []
-    rows_key: list[str] = []
-    r = N_HASHES // BANDS
-    for label in labels:
-        h = _trigram_hashes(label)
-        # sig[i] = min over grams of (a_i * h + b_i mod p)
-        prods = (h[None, :] * _A[:, None] + _B[:, None]) % _MERSENNE
-        sig = prods.min(axis=1)
-        for b in range(BANDS):
-            band = sig[b * r : (b + 1) * r]
-            key = f"{b}:" + "-".join(str(int(x)) for x in band)
-            rows_label.append(label)
-            rows_band.append(b)
-            rows_key.append(key)
-    return pd.DataFrame({"label": rows_label, "band_idx": rows_band, "band_key": rows_key})
+def minhash_signatures(df: DataFrame, id_col: str, value_col: str,
+                       grams: Callable[[str], np.ndarray], n_hashes: int,
+                       offset: int) -> DataFrame:
+    """(id_col, sig: array<long>) MinHash signatures, one Arrow kernel.
 
-
-def lsh_buckets(labels: DataFrame, label_col: str = "canon_label") -> DataFrame:
-    """Distinct labels -> (label, band_idx, band_key) bucket assignments."""
+    sig[i] = min over grams(value) of (a_i * h + b_i) mod (2^61 - 1) in
+    uint64 arithmetic (a_i * h wraps at 2^64), with fixed odd multipliers
+    a_i and offsets b_i = i * C + `offset`, so a signature is deterministic
+    across runs and machines. A value with no grams gets the all-zero
+    signature."""
+    idx = range(1, n_hashes + 1)
+    a = np.array([(2 * i + 1) * 0x9E3779B97F4A7C15 % _MERSENNE for i in idx], dtype=np.uint64)
+    b = np.array([(i * 0xC2B2AE3D27D4EB4F + offset) % _MERSENNE for i in idx], dtype=np.uint64)
+    zero = [0] * n_hashes
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
         for pdf in batches:
-            yield minhash_bands_batch(pdf[label_col].astype(str))
+            sigs = []
+            for v in pdf[value_col].fillna(""):
+                h = grams(v)
+                sigs.append(((h[None, :] * a[:, None] + b[:, None]) % _MERSENNE)
+                            .min(axis=1).astype(np.int64).tolist() if len(h) else zero)
+            yield pd.DataFrame({id_col: pdf[id_col].values, "sig": sigs})
 
-    return labels.select(label_col).distinct().mapInPandas(
-        run, schema="label string, band_idx int, band_key string"
+    schema = StructType([df.schema[id_col], StructField("sig", ArrayType(LongType()))])
+    return df.select(*dict.fromkeys((id_col, value_col))).mapInPandas(run, schema=schema)
+
+
+def band_keys(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """One (band_idx, band_key) row per band of `sig` (the other columns
+    carried): band_key joins the band's `rows` minhashes with '-'."""
+    return sigs.select(
+        *[c for c in sigs.columns if c != "sig"],
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda i: F.concat_ws("-", F.slice("sig", i * rows + 1, rows)),
+            )
+        ).alias("band_idx", "band_key"),
     )
 
 
-def _pairs_within(df: DataFrame, key_col: str, label_col: str) -> DataFrame:
-    a = df.select(F.col(key_col).alias("k"), F.col(label_col).alias("label_a"))
-    b = df.select(F.col(key_col).alias("k"), F.col(label_col).alias("label_b"))
+def cap_buckets(df: DataFrame, bucket_cols: list[str], id_col: str,
+                max_size: int = MAX_BLOCK_SIZE) -> DataFrame:
+    """Adds a `__salt` sub-bucket column: over-cap buckets are SPLIT into
+    deterministic sub-buckets of <= max_size (rank by id_col), not
+    truncated. Joins that include `__salt` in the key stay bounded at
+    C(max_size, 2) pairs per join key, while members past the cap keep
+    their intra-sub-bucket pairs — recall degrades gracefully instead of
+    members 65+ silently losing every candidate."""
+    w = Window.partitionBy(*bucket_cols).orderBy(id_col)
     return (
-        a.join(b, "k")
-        .where(F.col("label_a") < F.col("label_b"))
-        .select("label_a", "label_b")
+        df.withColumn("__rn", F.row_number().over(w))
+        .withColumn("__salt", ((F.col("__rn") - 1) / F.lit(max_size)).cast("int"))
+        .drop("__rn")
+    )
+
+
+def bucket_pairs(df: DataFrame, bucket_cols: list[str], id_col: str,
+                 carry: tuple[str, ...] = (),
+                 max_size: int | None = MAX_BLOCK_SIZE) -> DataFrame:
+    """Same-bucket self-join -> (id_a, id_b, <carry>_a, <carry>_b), id_a <
+    id_b, one row per shared bucket (banded callers take `.distinct()`).
+    Buckets are salted by `cap_buckets` unless max_size is None (full
+    recall: O(bucket^2) pairs, for keys that cannot run away)."""
+    keys = list(bucket_cols)
+    if max_size is not None:
+        df = cap_buckets(df, keys, id_col, max_size)
+        keys.append("__salt")
+
+    def side(s: str) -> DataFrame:
+        return df.select(*keys, F.col(id_col).alias(f"id_{s}"),
+                         *[F.col(c).alias(f"{c}_{s}") for c in carry])
+
+    return (
+        side("a").join(side("b"), keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry])
     )
 
 
@@ -99,37 +139,29 @@ def candidate_pairs(
 ) -> DataFrame:
     """Distinct (label, block_key) rows -> candidate (label_a, label_b) pairs.
 
-    Union of exact-key pairs and LSH-bucket pairs, deduplicated. Buckets
-    larger than MAX_BLOCK_SIZE are salted into deterministic sub-buckets
-    (lexicographic rank order) so pair counts stay bounded with partial
-    recall instead of over-cap labels losing every candidate; bucket
+    Union of exact-key pairs and LSH-bucket pairs, deduplicated. LSH
+    buckets larger than MAX_BLOCK_SIZE are salted into deterministic
+    sub-buckets (rank by label) so pair counts stay bounded with partial
+    recall instead of over-cap labels losing every candidate; block
     sizes are observable via `block_metrics`.
     """
     keyed = labels.select(label_col, block_col).distinct()
-    exact = _pairs_within(keyed, block_col, label_col)
+    exact = bucket_pairs(keyed, [block_col], label_col, max_size=None)
 
-    buckets = lsh_buckets(labels, label_col)
-    # over-cap buckets are salted into sub-buckets of <= MAX_BLOCK_SIZE
-    # (rank by label, deterministic) rather than truncated: pair count per
-    # join key stays bounded while labels past the cap keep their
-    # intra-sub-bucket candidates (graceful recall degradation)
-    w = Window.partitionBy("band_key").orderBy("label")
-    capped = (
-        buckets.withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "band_key",
-            F.concat("band_key", F.lit("#"),
-                     ((F.col("rn") - 1) / F.lit(MAX_BLOCK_SIZE)).cast("int")),
-        )
-        .drop("rn")
-    )
+    sigs = minhash_signatures(labels.select(label_col).distinct(), label_col,
+                              label_col, _trigram_hashes, N_HASHES, 17)
     # cheap JVM-side prefilter before the expensive scoring UDF: true typo
     # pairs have similar lengths; this prunes most spurious bucket pairs
-    fuzzy = _pairs_within(capped, "band_key", "label").where(
-        F.abs(F.length("label_a") - F.length("label_b"))
-        <= F.greatest(F.length("label_a"), F.length("label_b")) * 0.34
+    fuzzy = bucket_pairs(band_keys(sigs, BANDS, N_HASHES // BANDS),
+                         ["band_idx", "band_key"], label_col).where(
+        F.abs(F.length("id_a") - F.length("id_b"))
+        <= F.greatest(F.length("id_a"), F.length("id_b")) * 0.34
     )
-    return exact.unionByName(fuzzy).distinct()
+    return (
+        exact.unionByName(fuzzy)
+        .select(F.col("id_a").alias("label_a"), F.col("id_b").alias("label_b"))
+        .distinct()
+    )
 
 
 def exact_edges(mentions: DataFrame, aliases: DataFrame,
@@ -165,8 +197,9 @@ def exact_edges(mentions: DataFrame, aliases: DataFrame,
         with_canon.select("canon_label").distinct()
         .withColumn("block_key", slug("canon_label"))
     )
-    slug_edges = _pairs_within(canon, "block_key", "canon_label").withColumn(
-        "channel", F.lit("slug")
+    slug_edges = bucket_pairs(canon, ["block_key"], "canon_label", max_size=None).select(
+        F.col("id_a").alias("label_a"), F.col("id_b").alias("label_b"),
+        F.lit("slug").alias("channel"),
     )
     return alias_edges.unionByName(slug_edges).distinct()
 
@@ -181,15 +214,3 @@ def block_metrics(labels: DataFrame, label_col: str = "canon_label",
         (F.col("n_labels") * (F.col("n_labels") - 1) / 2).alias("n_pairs"),
     )
 
-
-def with_salt(df: DataFrame, key_col: str, buckets: int = 16,
-              out_col: str = "salted_key") -> DataFrame:
-    """Salted key for occurrence-level joins on skewed keys:
-    concat(key, '#', pmod(xxhash64(unique id cols), buckets)). The small
-    side must be exploded against all salt values. AQE skew-join splitting
-    usually suffices; this is the explicit fallback for 100TB-scale hot
-    labels."""
-    return df.withColumn(
-        out_col,
-        F.concat_ws("#", F.col(key_col), F.pmod(F.xxhash64(*df.columns), F.lit(buckets)).cast("string")),
-    )

@@ -12,48 +12,33 @@ Five strategies over a (doc_id, text) table, each returning an assignment
 - embedding_dedup:    cosine near-duplicates over an embedding column
 
 All heavy per-text work runs in Arrow-batched pandas UDFs; pair generation
-and grouping are DataFrame joins (same blocking/scoring/clustering shape as
-the mention-ER pipeline — this is record linkage over documents).
+and grouping are DataFrame joins through the mention-ER blocker's MinHash
+kernel, JVM banding and salted self-join (blocking.py `minhash_signatures`,
+`band_keys`, `bucket_pairs`): this is record linkage over documents. Band
+buckets are salted at blocking.MAX_BLOCK_SIZE (boilerplate corpora would
+otherwise put O(n^2) pairs in one skewed join key); only the exact-verified
+variants default to full recall.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
+import warnings
 import zlib
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from session_graph_spark.operators.blocking import (MAX_BLOCK_SIZE, band_keys,
+                                                    bucket_pairs, minhash_signatures)
 from session_graph_spark.operators.cc import connected_components
 
-# Per-bucket cap before the banded self-joins (same treatment as the
-# mention-ER blocker, blocking.py MAX_BLOCK_SIZE): a corpus with millions
-# of near-empty or boilerplate documents otherwise lands them all in one
-# band bucket -> O(n^2) pairs in a single skewed join key. Over-cap
-# buckets are salted into deterministic sub-buckets (see _cap_buckets),
-# bounding pairs per join key while keeping partial recall; identical
-# docs are already collapsed by exact_dedup upstream in any real pipeline.
-MAX_BUCKET_DOCS = 64
+_BAND = ["band_idx", "band_key"]
 
-
-def _cap_buckets(banded: DataFrame, bucket_cols: list[str],
-                 max_docs: int = MAX_BUCKET_DOCS) -> DataFrame:
-    """Adds a `__salt` sub-bucket column: over-cap buckets are SPLIT into
-    deterministic sub-buckets of <= max_docs (rank by doc_id), not
-    truncated. Joins that include `__salt` in the key stay bounded at
-    C(max_docs, 2) pairs per join key, while docs past the cap keep
-    their intra-sub-bucket pairs — recall degrades gracefully instead of
-    docs 65+ silently losing every candidate."""
-    w = Window.partitionBy(*bucket_cols).orderBy("doc_id")
-    return (
-        banded.withColumn("__rn", F.row_number().over(w))
-        .withColumn("__salt", ((F.col("__rn") - 1) / F.lit(max_docs)).cast("int"))
-        .drop("__rn")
-    )
 
 # --------------------------------------------------------------------------
 # exact
@@ -69,43 +54,39 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 # --------------------------------------------------------------------------
 # MinHash + LSH over word shingles
 # --------------------------------------------------------------------------
-_P = (1 << 61) - 1
-
-
-def _hash_params(n: int) -> tuple[np.ndarray, np.ndarray]:
-    a = np.array([(2 * i + 1) * 0x9E3779B97F4A7C15 % _P for i in range(1, n + 1)], dtype=np.uint64)
-    b = np.array([(i * 0xC2B2AE3D27D4EB4F + 31) % _P for i in range(1, n + 1)], dtype=np.uint64)
-    return a, b
+def _shingles(text: str, k: int) -> set[str]:
+    words = text.lower().split()
+    if len(words) < k:
+        return {" ".join(words)} if words else set()
+    return {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
 
 
 def _word_shingles(text: str, k: int) -> np.ndarray:
-    words = text.lower().split()
-    if len(words) < k:
-        grams = {" ".join(words)} if words else set()
-    else:
-        grams = {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
-    return np.array([zlib.crc32(g.encode("utf-8")) for g in grams], dtype=np.uint64)
+    return np.array([zlib.crc32(g.encode("utf-8")) for g in _shingles(text, k)],
+                    dtype=np.uint64)
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       n_hashes: int = 128, shingle_k: int = 3) -> DataFrame:
-    """(doc_id, sig: array<bigint>) MinHash signatures over word shingles."""
-    a, b = _hash_params(n_hashes)
+def _signatures(docs: DataFrame, text_col: str, id_col: str, n_hashes: int,
+                shingle_k: int) -> DataFrame:
+    """(doc_id, sig) word-shingle MinHash signatures."""
+    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    return minhash_signatures(d, "doc_id", "text", partial(_word_shingles, k=shingle_k),
+                              n_hashes, 31)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col].fillna("")):
-                h = _word_shingles(text, shingle_k)
-                if len(h) == 0:
-                    sig = np.zeros(n_hashes, dtype=np.int64)
-                else:
-                    sig = ((h[None, :] * a[:, None] + b[:, None]) % _P).min(axis=1).astype(np.int64)
-                ids.append(doc_id)
-                sigs.append(sig.tolist())
-            yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema="doc_id long, sig array<long>")
+def _dup_groups(docs: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """(doc_id, dup_group): connected components over (id_a, id_b) pairs;
+    dup_group = the component's min doc id, a doc with no pair maps to
+    itself."""
+    comp = connected_components(
+        pairs.select(F.col("id_a").cast("string").alias("u"),
+                     F.col("id_b").cast("string").alias("v"))
+    )
+    base = docs.select(F.col(id_col).alias("doc_id"))
+    return base.join(comp, base.doc_id.cast("string") == comp.label, "left").select(
+        "doc_id",
+        F.coalesce(F.col("cluster_id").cast("long"), F.col("doc_id")).alias("dup_group"),
+    )
 
 
 def minhash_lsh_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -113,27 +94,9 @@ def minhash_lsh_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "do
                       threshold: float = 0.8) -> DataFrame:
     """Near-dup assignment (doc_id, dup_group): LSH candidates verified by
     estimated Jaccard (signature agreement) >= threshold, then CC."""
-    sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_k).cache()
-    r = n_hashes // bands
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.concat_ws("-", F.slice("sig", i * r + 1, r)),
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    banded = _cap_buckets(banded, ["band_idx", "band_key"])
-    pairs = (
-        banded.alias("x").join(banded.alias("y"),
-                               (F.col("x.band_idx") == F.col("y.band_idx"))
-                               & (F.col("x.band_key") == F.col("y.band_key"))
-                               & (F.col("x.__salt") == F.col("y.__salt"))
-                               & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .select(F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b"))
-        .distinct()
-    )
+    sigs = _signatures(docs, text_col, id_col, n_hashes, shingle_k).cache()
+    pairs = bucket_pairs(band_keys(sigs, bands, n_hashes // bands), _BAND,
+                         "doc_id").distinct()
     # verify: fraction of agreeing minhashes estimates Jaccard
     sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
@@ -145,21 +108,12 @@ def minhash_lsh_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "do
                             lambda v: v)) / F.lit(float(n_hashes)),
         )
         .where(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b")
     )
-    comp = connected_components(
-        verified.select(F.col("id_a").cast("string").alias("u"),
-                        F.col("id_b").cast("string").alias("v"))
-    )
+    groups = _dup_groups(docs, id_col, verified)
     # CC materialized its input (localCheckpoint + count), so the cached
     # signatures are no longer reachable from any downstream plan
     sigs.unpersist()
-    base = docs.select(F.col(id_col).alias("doc_id"))
-    return (
-        base.join(comp, base.doc_id.cast("string") == comp.label, "left")
-        .select("doc_id",
-                F.coalesce(F.col("cluster_id").cast("long"), F.col("doc_id")).alias("dup_group"))
-    )
+    return groups
 
 
 def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
@@ -174,52 +128,29 @@ def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
     near-identical boilerplate would lose all their pairs while the
     verification step still claims exactness). Pass a cap only when the
     caller owns the recall tradeoff; the estimated-Jaccard scale path
-    (`minhash_lsh_dedup`) stays capped at MAX_BUCKET_DOCS."""
-    sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_k)
-    r = n_hashes // bands
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.concat_ws("-", F.slice("sig", i * r + 1, r)),
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    cond = (
-        (F.col("x.band_idx") == F.col("y.band_idx"))
-        & (F.col("x.band_key") == F.col("y.band_key"))
-        & (F.col("x.doc_id") < F.col("y.doc_id"))
-    )
-    if max_bucket_docs is not None:
-        banded = _cap_buckets(banded, ["band_idx", "band_key"], max_bucket_docs)
-        cond = cond & (F.col("x.__salt") == F.col("y.__salt"))
-    else:
+    (`minhash_lsh_dedup`) stays capped at MAX_BLOCK_SIZE."""
+    banded = band_keys(_signatures(docs, text_col, id_col, n_hashes, shingle_k),
+                       bands, n_hashes // bands)
+    if max_bucket_docs is None:
         # full recall means unbounded O(bucket^2) pairs in one join key:
         # surface the risk instead of silently eating it ('no silent
         # caps' in reverse). Costs one extra pass over the signatures —
         # acceptable for the oracle-exact variant; the capped scale path
         # (minhash_lsh_dedup) never takes this branch
         biggest = (
-            banded.groupBy("band_idx", "band_key").count()
+            banded.groupBy(*_BAND).count()
             .agg(F.max("count").alias("m")).first()["m"]
         ) or 0
-        if biggest > MAX_BUCKET_DOCS:
-            import warnings
-
+        if biggest > MAX_BLOCK_SIZE:
             warnings.warn(
                 f"minhash_candidate_pairs: largest band bucket holds "
-                f"{biggest} docs (> {MAX_BUCKET_DOCS}); uncapped full-"
+                f"{biggest} docs (> {MAX_BLOCK_SIZE}); uncapped full-"
                 f"recall mode will emit O(n^2) pairs for it — pass "
                 f"max_bucket_docs or use minhash_lsh_dedup for skewed "
                 f"near-identical corpora",
                 stacklevel=2,
             )
-    return (
-        banded.alias("x").join(banded.alias("y"), cond)
-        .select(F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(banded, _BAND, "doc_id", max_size=max_bucket_docs).distinct()
 
 
 def word_shingle_jaccard(pairs_with_text: DataFrame, shingle_k: int = 3,
@@ -229,16 +160,10 @@ def word_shingle_jaccard(pairs_with_text: DataFrame, shingle_k: int = 3,
 
     @F.pandas_udf("double")
     def _j(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-        def sh(s: str) -> set[str]:
-            words = str(s).lower().split()
-            if len(words) < shingle_k:
-                return {" ".join(words)} if words else set()
-            return {" ".join(words[i:i + shingle_k])
-                    for i in range(len(words) - shingle_k + 1)}
         out = np.empty(len(a))
         av, bv = a.fillna(""), b.fillna("")
         for i in range(len(a)):
-            ga, gb = sh(av.iat[i]), sh(bv.iat[i])
+            ga, gb = _shingles(str(av.iat[i]), shingle_k), _shingles(str(bv.iat[i]), shingle_k)
             out[i] = len(ga & gb) / max(len(ga | gb), 1)
         return pd.Series(out, index=a.index)
 
@@ -282,15 +207,7 @@ def minhash_dedup_groups_exact(docs: DataFrame, text_col: str = "text",
     estimated-Jaccard-verify variant."""
     pairs = minhash_dedup_pairs(docs, text_col, id_col, n_hashes, bands,
                                 shingle_k, threshold)
-    comp = connected_components(
-        pairs.select(F.col("id_a").cast("string").alias("u"),
-                     F.col("id_b").cast("string").alias("v"))
-    )
-    base = docs.select(F.col(id_col).alias("doc_id"))
-    return base.join(comp, base.doc_id.cast("string") == comp.label, "left").select(
-        "doc_id",
-        F.coalesce(F.col("cluster_id").cast("long"), F.col("doc_id")).alias("dup_group"),
-    )
+    return _dup_groups(docs, id_col, pairs)
 
 
 # --------------------------------------------------------------------------
@@ -344,19 +261,11 @@ def simhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
             for i in range(4)
         ])).alias("band_idx", "band_val"),
     )
-    banded = _cap_buckets(banded, ["band_idx", "band_val"])
-    cand = (
-        banded.alias("x").join(banded.alias("y"),
-                               (F.col("x.band_idx") == F.col("y.band_idx"))
-                               & (F.col("x.band_val") == F.col("y.band_val"))
-                               & (F.col("x.__salt") == F.col("y.__salt"))
-                               & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .select(F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b"),
-                F.col("x.simhash").alias("sh_a"), F.col("y.simhash").alias("sh_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(banded, ["band_idx", "band_val"], "doc_id",
+                        carry=("simhash",)).distinct()
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        cand.withColumn("hamming",
+                        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -397,17 +306,9 @@ def embedding_dedup(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embe
     e = emb.select(F.col(id_col).alias("doc_id"),
                    F.transform(vec_col, lambda x: x.cast("double")).alias("v"))
     e = e.withColumn("bucket", hyperplane_bucket(F.col("v"), n_planes))
-    e = _cap_buckets(e, ["bucket"])
-    pairs = (
-        e.alias("x").join(e.alias("y"),
-                          (F.col("x.bucket") == F.col("y.bucket"))
-                          & (F.col("x.__salt") == F.col("y.__salt"))
-                          & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .select(F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b"),
-                F.col("x.v").alias("va"), F.col("y.v").alias("vb"))
-    )
+    pairs = bucket_pairs(e, ["bucket"], "doc_id", carry=("v",))
     return (
-        pairs.withColumn("cosine", cosine_expr(F.col("va"), F.col("vb")))
+        pairs.withColumn("cosine", cosine_expr(F.col("v_a"), F.col("v_b")))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )

@@ -159,12 +159,3 @@ def match_edges(scored: DataFrame, threshold: float = MATCH_THRESHOLD) -> DataFr
     """P8: keep pairs with score >= threshold."""
     return scored.where(F.col("score") >= F.lit(threshold)).select("label_a", "label_b")
 
-
-def score_distribution(scored: DataFrame, n_bins: int = 20) -> DataFrame:
-    """Score histogram (A4 analog / north-rule per-stage metrics)."""
-    return (
-        scored.withColumn("bin", F.floor(F.col("score") * n_bins) / n_bins)
-        .groupBy("bin")
-        .agg(F.count("*").alias("n_pairs"))
-        .orderBy("bin")
-    )

@@ -30,12 +30,12 @@ from session_graph_spark.functions import filters as Flt
 from session_graph_spark.functions.filters import is_linkable_entity
 from session_graph_spark.functions.normalize import apply_aliases, slug
 from session_graph_spark.functions.similarity import MATCH_THRESHOLD
-from session_graph_spark.operators.blocking import block_metrics, candidate_pairs
+from session_graph_spark.operators.blocking import candidate_pairs
 from session_graph_spark.operators.cc import assign_clusters
 from session_graph_spark.operators.extract import (explode_mention_arrays,
                                                    extract_mention_arrays,
                                                    extract_mentions)
-from session_graph_spark.operators.scoring import match_edges, score_distribution, score_pairs
+from session_graph_spark.operators.scoring import match_edges, score_pairs
 from session_graph_spark.plans.checkpoint import StageStore
 
 MIN_SESSIONS = 2  # reference --min-sessions default (link_entities.py:824-828)
@@ -429,7 +429,6 @@ def resolve(
     threshold: float = MATCH_THRESHOLD,
     checkpoint_dir: str | None = None,
     decisions: DataFrame | None = None,
-    collect_metrics: bool = False,
     max_parallelism: int | None = None,
 ) -> ResolutionResult:
     """Run the full ER pipeline. All heavy lifting is DataFrame ops; Python
@@ -569,16 +568,9 @@ def resolve(
                 "cluster_id")
     )
 
-    metrics: dict = dict(store.manifest)
-    if collect_metrics:
-        metrics["block_sizes"] = [
-            r.asDict() for r in block_metrics(labels).orderBy(F.desc("n_labels")).limit(20).collect()
-        ]
-        metrics["score_histogram"] = [r.asDict() for r in score_distribution(scored).collect()]
-        metrics["n_clusters"] = clusters.select("cluster_id").distinct().count()
-
     return ResolutionResult(
         mentions=mentions, labels=labels, pairs_scored=scored, edges=edges,
-        clusters=clusters, mention_clusters=mention_clusters, metrics=metrics,
+        clusters=clusters, mention_clusters=mention_clusters,
+        metrics=dict(store.manifest),
         store=store,
     )

@@ -417,13 +417,13 @@ def test_y4m_lazy_frame_seek_many_frames(spark):
 
 def test_exact_variants_keep_full_recall_over_cap(spark):
     """The exact-Jaccard-verified variants are UNCAPPED by default: a
-    bucket with more docs than MAX_BUCKET_DOCS (skewed boilerplate) must
+    bucket with more docs than MAX_BLOCK_SIZE (skewed boilerplate) must
     still yield every pair — a silent cap would drop docs 65+ while the
     verification step claims exactness."""
-    from session_graph_spark.operators.dedup import (MAX_BUCKET_DOCS,
-                                                     minhash_dedup_pairs)
+    from session_graph_spark.operators.blocking import MAX_BLOCK_SIZE
+    from session_graph_spark.operators.dedup import minhash_dedup_pairs
 
-    n = MAX_BUCKET_DOCS + 16  # 80 identical docs, one band bucket
+    n = MAX_BLOCK_SIZE + 16  # 80 identical docs, one band bucket
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.lit("identical boilerplate text repeated verbatim").alias("text"),
@@ -433,8 +433,8 @@ def test_exact_variants_keep_full_recall_over_cap(spark):
     # opting into the cap salts into sub-buckets: bounded join, and every
     # doc (incl. 65+) keeps its intra-sub-bucket pairs
     capped = minhash_dedup_pairs(docs, threshold=0.8,
-                                 max_bucket_docs=MAX_BUCKET_DOCS)
-    assert capped.count() == _salted_pairs(n, MAX_BUCKET_DOCS)
+                                 max_bucket_docs=MAX_BLOCK_SIZE)
+    assert capped.count() == _salted_pairs(n, MAX_BLOCK_SIZE)
 
 
 def _salted_pairs(n: int, cap: int) -> int:
@@ -448,8 +448,8 @@ def test_dedup_bucket_caps(spark):
     band bucket; salted sub-bucketing must bound pairs per join key at
     C(cap, 2) (the unsalted form is O(n^2) in a single skewed join key)
     while docs past the cap keep their intra-sub-bucket pairs."""
-    from session_graph_spark.operators.dedup import (MAX_BUCKET_DOCS,
-                                                     embedding_dedup,
+    from session_graph_spark.operators.blocking import MAX_BLOCK_SIZE
+    from session_graph_spark.operators.dedup import (embedding_dedup,
                                                      minhash_lsh_dedup,
                                                      simhash_dedup)
 
@@ -458,7 +458,7 @@ def test_dedup_bucket_caps(spark):
         F.col("id").alias("doc_id"),
         F.lit("the same boilerplate text repeated for every row").alias("text"),
     )
-    exp = _salted_pairs(n, MAX_BUCKET_DOCS)
+    exp = _salted_pairs(n, MAX_BLOCK_SIZE)
 
     # simhash: 4 bands, all docs identical -> one salted bucket per band;
     # distinct dedup collapses the 4 bands to one sub-bucketed pair set
@@ -537,24 +537,24 @@ def test_ivf_topk_recall_and_determinism(spark):
 def test_salted_caps_invariants(spark):
     """Property: for random skewed bucket assignments, salted
     sub-bucketing (a) never produces a join key with more than
-    MAX_BUCKET_DOCS docs, (b) keeps every doc in exactly one sub-bucket
+    MAX_BLOCK_SIZE docs, (b) keeps every doc in exactly one sub-bucket
     per original bucket, and (c) assigns salts deterministically by
     doc_id rank."""
     import random
 
-    from session_graph_spark.operators.dedup import MAX_BUCKET_DOCS, _cap_buckets
+    from session_graph_spark.operators.blocking import MAX_BLOCK_SIZE, cap_buckets
 
     rng = random.Random(123)
     rows = [(i, f"b{rng.randint(0, 3)}") for i in range(500)]
     banded = spark.createDataFrame(rows, "doc_id long, bucket string")
-    out = _cap_buckets(banded, ["bucket"]).collect()
+    out = cap_buckets(banded, ["bucket"], "doc_id").collect()
 
     assert len(out) == len(rows)  # (b): nothing dropped
     by_key: dict = {}
     for r in out:
         by_key.setdefault((r["bucket"], r["__salt"]), []).append(r["doc_id"])
     for (bucket, salt), ids in by_key.items():
-        assert len(ids) <= MAX_BUCKET_DOCS  # (a)
+        assert len(ids) <= MAX_BLOCK_SIZE  # (a)
     # (c): salt = rank(doc_id within bucket) // cap
     by_bucket: dict = {}
     for i, b in rows:
@@ -562,6 +562,6 @@ def test_salted_caps_invariants(spark):
     expected = {}
     for b, ids in by_bucket.items():
         for rank, i in enumerate(sorted(ids)):
-            expected[(b, i)] = rank // MAX_BUCKET_DOCS
+            expected[(b, i)] = rank // MAX_BLOCK_SIZE
     for r in out:
         assert r["__salt"] == expected[(r["bucket"], r["doc_id"])]
