@@ -559,21 +559,24 @@ def q_models_seen(spark, sf):
 
 
 def q_er_labels(spark, sf):
-    """The ER pipeline's post-filter label table (normalized_labels stage:
+    """The ER pipeline's post-filter label table (resolve()'s labels
+    stage, normalized_labels_from_arrays over the per-turn mention arrays:
     alias join -> distinct conv/label -> min-sessions >= 2 -> block key),
     joined to the A4 blocking metrics (per-block label count and pair
     count, blocking.block_metrics — absorbs the former er_block_metrics
     driver row). Fully SQL-expressible on this corpus (plain lowercase
     alpha tokens, so the L2 pandas filter reduces to a no-op — same
     justification as _mentions_cte)."""
-    from session_graph_spark.plans.pipeline import (alias_df, mentions_from_turns,
-                                                    normalized_labels, prepare_turns)
+    from session_graph_spark.plans.pipeline import (
+        alias_df, mention_arrays_from_turns, normalized_labels_from_arrays,
+        prepare_turns)
     from session_graph_spark.sources.testdata import documents_as_turns
 
     from session_graph_spark.operators.blocking import block_metrics
 
     turns = prepare_turns(documents_as_turns(spark, sf))
-    lab = normalized_labels(mentions_from_turns(turns), alias_df(spark))
+    lab = normalized_labels_from_arrays(mention_arrays_from_turns(turns),
+                                        alias_df(spark))
     bm = block_metrics(lab).select(
         "block_key",
         F.col("n_labels").alias("n_labels_in_block"),
@@ -1097,12 +1100,13 @@ def q_pair_scores_cached(spark, sf):
     pairs must short-circuit (sentinel survives verbatim), fresh pairs
     must match the DuckDB kernel bit-for-bit before rounding."""
     from session_graph_spark.operators.scoring import score_pairs
-    from session_graph_spark.plans.pipeline import alias_df, mentions_from_turns, \
-        normalized_labels, prepare_turns
+    from session_graph_spark.plans.pipeline import (
+        alias_df, mention_arrays_from_turns, normalized_labels_from_arrays,
+        prepare_turns)
     from session_graph_spark.sources.testdata import documents_as_turns
 
-    m = mentions_from_turns(prepare_turns(documents_as_turns(spark, sf)))
-    lab = normalized_labels(m, alias_df(spark)).select("canon_label")
+    m = mention_arrays_from_turns(prepare_turns(documents_as_turns(spark, sf)))
+    lab = normalized_labels_from_arrays(m, alias_df(spark)).select("canon_label")
     a = lab.select(F.col("canon_label").alias("label_a"))
     b = lab.select(F.col("canon_label").alias("label_b"))
     pairs = a.crossJoin(b).where(F.col("label_a") < F.col("label_b"))
@@ -1781,7 +1785,7 @@ def _kb_pipeline_oracle() -> str:
 
 
 def _er_labels_cte(min_sessions: int = 2) -> str:
-    """normalized_labels stage over the documents-derived turns: alias
+    """normalized_labels_from_arrays over the documents-derived turns: alias
     broadcast join -> distinct (conv, canon) -> min-sessions filter -> slug
     block key. Valid on this corpus for the same reason as _mentions_cte
     (plain lowercase alpha tokens: the L2 pandas filter rejects nothing)."""

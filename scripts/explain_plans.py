@@ -53,17 +53,28 @@ def main() -> None:
         ["PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]", "ReadSchema"],
     ))
 
-    # 2. alias broadcast join
+    # 2. labels stage (resolve()'s form): per-conv distinct labels from
+    # the mention arrays, alias broadcast join, per-conv canonical
+    # distinct riding the conv_id exchange, count per label
     turns = P.prepare_turns(documents_as_turns(spark, sf))
     mentions = P.mentions_from_turns(turns)
-    labels = P.normalized_labels(mentions, P.alias_df(spark))
+    labels = P.normalized_labels_from_arrays(
+        P.mention_arrays_from_turns(turns), P.alias_df(spark))
     # formatted mode under AQE does not print codegen stage markers; the
     # simple mode's "*(n)" prefixes show whole-stage codegen spans
     simple = explain_str(labels, "simple")
     assert "*(" in simple, "expected whole-stage codegen spans in labels plan"
+    labels_plan = explain_str(labels)
+    assert "hashpartitioning(conv_id" in labels_plan, \
+        "labels must group the mention arrays by conv_id"
+    assert not [ln for ln in labels_plan.splitlines()
+                if "hashpartitioning(" in ln and "conv_id" in ln
+                and "canon_label" in ln], \
+        "the (conv_id, canon_label) distinct must ride the conv_id exchange"
     sections.append((
-        "Alias dimension join is broadcast (normalized_labels)",
-        explain_str(labels),
+        "Labels stage: alias broadcast join on per-conv distinct labels, "
+        "no (conv_id, canon_label) exchange",
+        labels_plan,
         ["BroadcastHashJoin", "ArrowEvalPython"],
     ))
 
@@ -194,9 +205,6 @@ def main() -> None:
     # range-backed (local relations would constant-fold the whole plan).
     from session_graph_spark.plans.pipeline import _mention_context, alias_df
 
-    # labels must NOT be alias surfaces: a band label that remaps away
-    # has an empty surface preimage, and with an all-literal band the
-    # optimizer constant-folds the whole stage to an empty relation
     m_demo = spark.range(100).select(
         F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("conv_id"),
         (F.col("id") % 3).cast("int").alias("turn_idx"),
@@ -208,7 +216,7 @@ def main() -> None:
         F.element_at(F.array(F.lit("alphaflux"), F.lit("betagrid")),
                      (F.col("id") + 1).cast("int")).alias("canon_label"))
     ctx_plan = explain_str(_mention_context(
-        m_demo, alias_df(spark), l_demo, w_demo, cache=False))
+        m_demo, alias_df(spark), l_demo, w_demo))
     assert ctx_plan.count("WindowGroupLimit") >= 2, \
         "ctx sample must plan as a partial+final rank-limit pushdown"
     assert "CartesianProduct" not in ctx_plan

@@ -99,6 +99,24 @@ def apply_aliases(
     )
 
 
+def alias_preimage(alias_df: DataFrame, canon: DataFrame) -> DataFrame:
+    """Preimage of `canon` (keyed by canon_label) under apply_aliases:
+    (norm_label, canon_label, *canon's other columns), one row per raw
+    label that canonicalizes into `canon` — each alias surface of a
+    canon_label, plus each canon_label that is not itself a remapped
+    surface (a remapped surface never canonicalizes to itself). Joining
+    raw rows to it on norm_label equals apply_aliases followed by an
+    inner join with `canon`, in one broadcast probe of a dim-sized table."""
+    surfaces = alias_df.select(F.col("surface").alias("norm_label"),
+                               F.col("canonical").alias("canon_label"))
+    cols = ["norm_label", "canon_label",
+            *[c for c in canon.columns if c != "canon_label"]]
+    direct = (canon.withColumn("norm_label", F.col("canon_label"))
+              .join(surfaces.select("norm_label"), "norm_label", "left_anti"))
+    return (surfaces.join(canon, "canon_label").select(*cols)
+            .unionByName(direct.select(*cols)))
+
+
 # --------------------------------------------------------------------------
 # N5: timestamp normalization
 # --------------------------------------------------------------------------

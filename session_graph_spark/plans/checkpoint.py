@@ -110,10 +110,10 @@ class StageStore:
         self._flush()
         return self.spark.read.parquet(str(path))
 
-    def release(self, blocking: bool = False) -> None:
+    def release(self) -> None:
         """Drop the memory policy's cached stages."""
         for df in self.cached:
-            df.unpersist(blocking)
+            df.unpersist()
         self.cached.clear()
 
 

@@ -10,7 +10,7 @@ A decision cache skips rescoring known pairs.
 Stage boundaries follow the reference's link_entities entry point:
   P9 subagent filter, P3 min-length, P4 assistant-only
   F1 deterministic extraction (+ L1 validity inside)
-  N2/N4 normalization + alias broadcast join
+  N2/N4 normalization + alias broadcast join (on per-conv distinct labels)
   P6 L2 linkability filter
   P7 min-sessions frequency filter (countDistinct conv_id >= 2)
   M2 blocking (exact slug key + MinHash-LSH)
@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from session_graph_spark.data import alias_rows
 from session_graph_spark.functions import filters as Flt
 from session_graph_spark.functions.filters import is_linkable_entity
-from session_graph_spark.functions.normalize import apply_aliases, slug
+from session_graph_spark.functions.normalize import (alias_preimage,
+                                                     apply_aliases, slug)
 from session_graph_spark.functions.similarity import MATCH_THRESHOLD
 from session_graph_spark.operators.blocking import candidate_pairs
 from session_graph_spark.operators.cc import assign_clusters
@@ -57,14 +58,14 @@ class ResolutionResult:
     metrics: dict = field(default_factory=dict)
     store: StageStore | None = field(default=None, repr=False)
 
-    def unpersist(self, blocking: bool = False) -> None:
+    def unpersist(self) -> None:
         """Release the stages the memory policy cached. A long-lived
         service that calls resolve() per batch (IncrementalRunner) would
         otherwise accumulate one set of cached stages per batch in the
         executor block manager — call this once every consumer has
         severed lineage (collect/localCheckpoint/write)."""
         if self.store is not None:
-            self.store.release(blocking)
+            self.store.release()
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
@@ -128,128 +129,61 @@ def mention_arrays_from_turns(turns: DataFrame) -> DataFrame:
     return extract_mention_arrays(_extraction_input(turns))
 
 
-def normalized_labels(
-    mentions: DataFrame, aliases: DataFrame, min_sessions: int = MIN_SESSIONS
+def normalized_labels_from_arrays(
+    m_arrays: DataFrame, aliases: DataFrame, min_sessions: int = MIN_SESSIONS
 ) -> DataFrame:
-    """N4 alias join + P6 linkability + P7 frequency filter; output one row
-    per surviving distinct label with its block key and session count.
+    """N4 alias join + P6 linkability + P7 frequency filter over the
+    per-turn mention-label ARRAYS (the form resolve()'s mentions stage
+    materializes); one row per surviving distinct label with its session
+    count and block key. Row-identical to the classic per-mention form,
+    the reference in tests/test_r7_pipeline_equiv.py.
+
+    The arrays are aggregated by conv_id FIRST (collect_list of per-turn
+    arrays: one append per turn row, ~10x fewer partial-aggregate inputs
+    than mention rows) and deduped in-array, so the alias broadcast join
+    probes each conversation's DISTINCT labels, not every mention row —
+    the r7 probe priced the per-mention shape at 21.0s vs 13.0s for the
+    per-conv form (then with a literal-map lookup) at sf1.0/local[32]
+    (probe in commit 4247e06, interleaved best-of-3, identical output
+    fingerprints). The (conv_id, canon_label)
+    distinct then runs on the conv_id partitioning the grouping left
+    behind (no exchange of its own; scripts/explain_plans.py asserts it),
+    so count(*) per label == countDistinct(conv_id) and the only other
+    exchange carries label-cardinality partial counts.
 
     Curated alias canonicals bypass L2 (whitelist semantics): a canonical
     like 'node.js' would otherwise hit the file-extension rule even though
-    it is a known-good dictionary entry."""
-    # Alias-join FIRST (broadcast, map-side, shuffle-free), then ONE
-    # distinct aggregate. A distinct *before* the join (the round-1 shape)
-    # spent a full extra shuffle of mention-level rows to shrink the input
-    # of a join that never shuffles anyway. Round 6 folded the remaining
-    # dropDuplicates + groupBy-count (two sequential shuffle rounds over
-    # mention-level rows) into a single countDistinct aggregate: Catalyst
-    # plans it as partial-dedup map-side -> one exchange keyed on the
-    # label -> final exact distinct count — same semantics (the DuckDB
-    # oracle's count(distinct conv_id) is untouched), one less shuffle
-    # barrier, measured 9.25s -> 7.03s on the 11.2M-mention bench corpus
-    # at local[4]. The L2 UDF still runs on distinct labels (hundreds).
-    pairs = apply_aliases(mentions.select("conv_id", "norm_label"), aliases,
-                          label_col="norm_label", out_col="canon_label")
+    it is a known-good dictionary entry. The whitelist is a broadcast
+    left-join flag, so neither dimension is ever collected to the driver
+    and the dictionary may be any size."""
+    per_conv = (
+        m_arrays.groupBy("conv_id")
+        .agg(F.array_distinct(F.flatten(F.collect_list("norm_labels")))
+             .alias("ls"))
+        .select("conv_id", F.explode("ls").alias("norm_label"))
+    )
     counts = (
-        pairs.groupBy("canon_label")
-        .agg(F.countDistinct("conv_id").alias("n_sessions"))
+        apply_aliases(per_conv, aliases, label_col="norm_label",
+                      out_col="canon_label")
+        .select("conv_id", "canon_label").distinct()
+        .groupBy("canon_label").agg(F.count("*").alias("n_sessions"))
         .where(F.col("n_sessions") >= min_sessions)
     )
-    return _labels_tail(counts, aliases)
-
-
-def _labels_tail(counts: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Shared post-count tail: canonical whitelist + L2 linkability +
-    block key. The whitelist is a broadcast semi-join flag, not a
-    driver-side collect, so it stays a dim-table concern at any
-    alias-dictionary size."""
     canon_dim = F.broadcast(
         aliases.select(F.col("canonical").alias("canon_label")).distinct()
         .withColumn("__is_canon", F.lit(True))
     )
-    counts = (
+    return (
         counts.join(canon_dim, "canon_label", "left")
         .where(is_linkable_entity(F.col("canon_label"))
                | F.col("__is_canon").isNotNull())
         .drop("__is_canon")
+        .withColumn("block_key", slug("canon_label"))
     )
-    return counts.withColumn("block_key", slug("canon_label"))
-
-
-# above this alias-dimension size the labels array path falls back to
-# the classic join form: the in-array lookup is a literal map expression
-# whose planning cost grows with the dictionary, while the dictionary is
-# driver-sized by design (N4)
-_ALIAS_MAP_LITERAL_MAX = 10_000
-
-
-def normalized_labels_from_arrays(
-    m_arrays: DataFrame, aliases: DataFrame, min_sessions: int = MIN_SESSIONS
-) -> DataFrame:
-    """normalized_labels computed from the per-turn mention-label ARRAYS
-    (the form resolve()'s mentions stage materializes) — value-identical to
-    `normalized_labels(explode_mention_arrays(m_arrays), aliases)`
-    (pinned by tests/test_r7_pipeline_equiv.py), restructured for scale:
-
-    - aggregate the arrays by conv_id FIRST (collect_list of per-turn
-      arrays: one append per turn row, ~10x fewer partial-aggregate
-      inputs than mention rows, and partial lists merge correctly across
-      partition boundaries — no layout assumption);
-    - per conv, flatten + in-array dedup + in-array alias lookup +
-      re-dedup: each conv contributes each CANONICAL label at most once;
-    - therefore count(*) per label == countDistinct(conv_id), turning
-      the exact two-phase distinct aggregate (an exchange keyed
-      (canon_label, conv_id) over every distinct pair) into a plain
-      count whose partial aggregate is label-cardinality-sized.
-
-    The former shape ran every mention row (112M at sf1.0) through the
-    alias broadcast probe and a (canon, conv)-keyed hash dedup — the r7
-    probe priced that stage at 21.0s vs 13.0s for this form
-    (probe in commit 4247e06, interleaved best-of-3, identical
-    output fingerprints). The alias lookup happens on per-conv DISTINCT
-    labels via a literal-map expression; the dictionary is collected
-    once (driver-sized dim by design, same as _mention_context's use)
-    and oversized dictionaries fall back to the classic join form.
-
-    r7 pass 3: the map probe is guarded by `x.isin(<surfaces>)` — Spark's
-    ElementAt on a map literal does a LINEAR key walk (188 comparisons
-    per miss at the current dictionary), while the optimizer compiles
-    the isin guard to an InSet hash probe, so misses (the overwhelming
-    majority of labels) cost O(1) and only true alias hits pay the walk.
-    Decision-identical: isin(surfaces) is exactly the condition under
-    which element_at is non-null. Measured 17.7s -> 7.8s for the whole
-    labels stage at sf1.0/local[32] (probe in commit 4247e06,
-    interleaved best-of-3, fingerprints equal)."""
-    alias_pairs = [
-        (r["surface"], r["canonical"])
-        for r in aliases.select("surface", "canonical").collect()
-    ]
-    if len(alias_pairs) > _ALIAS_MAP_LITERAL_MAX:
-        return normalized_labels(explode_mention_arrays(m_arrays), aliases,
-                                 min_sessions)
-    per_conv = m_arrays.groupBy("conv_id").agg(
-        F.flatten(F.collect_list("norm_labels")).alias("ls"))
-    if alias_pairs:
-        amap = F.create_map(*[F.lit(x) for pair in alias_pairs for x in pair])
-        akeys = [s for s, _ in alias_pairs]
-        canon_set = F.array_distinct(F.transform(
-            F.array_distinct("ls"),
-            lambda x: F.when(x.isin(akeys),
-                             F.coalesce(F.element_at(amap, x), x))
-                       .otherwise(x)))
-    else:  # empty dictionary: canonical == raw
-        canon_set = F.array_distinct(F.col("ls"))
-    counts = (
-        per_conv.select(F.explode(canon_set).alias("canon_label"))
-        .groupBy("canon_label").agg(F.count("*").alias("n_sessions"))
-        .where(F.col("n_sessions") >= min_sessions)
-    )
-    return _labels_tail(counts, aliases)
 
 
 def _mention_context(mentions: DataFrame, aliases: DataFrame,
-                     labels: DataFrame, wanted: DataFrame,
-                     cache: bool = True) -> DataFrame | None:
+                     labels: DataFrame, wanted: DataFrame) -> DataFrame | None:
     """Per-canonical-label top-5 co-mention context vectors for the
     scoring bonus, or None when the band is empty (nothing the bonus can
     flip). Three scale bounds keep this stage O(band x evidence), never
@@ -268,71 +202,30 @@ def _mention_context(mentions: DataFrame, aliases: DataFrame,
     - CONTENT: co-occurrence counts only labels from the SURVIVING set
       (min-sessions filter) — one-off labels are noise as context.
 
-    The derivation makes two narrow passes over the cached mention
-    table (pick the sample turns; gather co-mentions on them); every
-    wide operation runs on band-sized data. Both passes filter on the
-    RAW norm_label / turn key FIRST and only then canonicalize: the
-    band filter is on apply_aliases' *output* (a coalesce over the
-    broadcast-join result), which Catalyst cannot push below the join,
-    so the r5 shape ran every corpus mention row through 2-3 broadcast
-    probes before discarding it — measured corpus-scan-bound under load
-    (round-6 pools in commit 4247e06: 4x more band rows moved the 1-core
-    stage only 14.3s -> 16.6s). The alias dimension is driver-sized by
-    design (N4), so the band's surface-form preimage is computed up
-    front and pushed down as the scan filter; aliasing then runs on
-    band-sized data. Bit-identical to the r5 plan: filtering the
-    preimage then canonicalizing == canonicalizing then filtering, and
-    the surviving-set semi-join was a no-op on the sample pass because
-    band labels come from candidate_pairs(labels). Cached (not
-    force-materialized): the two broadcast builds in
-    apply_context_bonus are the only consumers, and the first populates
-    the cache for the second."""
+    The derivation makes two narrow passes over the mention table (pick
+    the sample turns; gather co-mentions on them); every wide operation
+    runs on band-sized data. Both passes key the corpus scan on the RAW
+    norm_label / turn key: canonicalizing first and filtering on
+    apply_aliases' output (a coalesce over the join result, which
+    Catalyst cannot push below the join) ran every corpus mention row
+    through 2-3 broadcast probes before discarding it — measured
+    corpus-scan-bound under load (round-6 pools in commit 4247e06: 4x
+    more band rows moved the 1-core stage only 14.3s -> 16.6s). The
+    sample pass therefore probes the band's preimage under aliasing
+    (normalize.alias_preimage: a dim-sized broadcast that carries each
+    row's canon_label), one probe per mention row at any band or
+    dictionary size, with nothing collected to the driver. The result is
+    lazy; resolve() caches it for the two broadcast builds in
+    apply_context_bonus."""
     from pyspark.sql import Window
 
     from session_graph_spark.functions.similarity import CTX_EVIDENCE_TURNS
 
-    # the band label set is tiny by construction (labels of pairs whose
-    # kernel score fell in an 0.08-wide band); collecting it lets the
-    # mention filter be a literal isin and the empty band skip every
-    # scan. The guard keeps the driver safe if a pathological corpus
-    # floods the band — past it, a broadcast semi-join carries the volume
-    wanted_rows = wanted.limit(10_001).collect()
-    if not wanted_rows:
+    if wanted.isEmpty():
         return None
-    alias_pairs = [
-        (r["surface"], r["canonical"])
-        for r in aliases.select("surface", "canonical").collect()
-    ]
     raw_m = mentions.select("conv_id", "turn_idx", "norm_label")
-    if len(wanted_rows) <= 10_000:
-        # preimage of the band under apply_aliases: every surface that
-        # canonicalizes INTO the band, plus band labels that are not
-        # themselves remapped surfaces (a surface that aliases away can
-        # never canonicalize to itself)
-        wanted_set = {r[0] for r in wanted_rows}
-        alias_keys = {s for s, _ in alias_pairs}
-        surfaces = sorted(
-            {s for s, c in alias_pairs if c in wanted_set}
-            | (wanted_set - alias_keys)
-        )
-        band_raw = raw_m.where(F.col("norm_label").isin(surfaces))
-    else:
-        # same preimage, derived distributed when the band floods
-        surf_df = (
-            aliases.select(F.col("surface").alias("norm_label"),
-                           F.col("canonical").alias("canon_label"))
-            .join(F.broadcast(wanted), "canon_label", "left_semi")
-            .select("norm_label")
-            .unionByName(
-                wanted.select(F.col("canon_label").alias("norm_label"))
-                .join(F.broadcast(aliases.select(
-                    F.col("surface").alias("norm_label"))),
-                    "norm_label", "left_anti")
-            )
-        )
-        band_raw = raw_m.join(F.broadcast(surf_df), "norm_label", "left_semi")
-    band_m = apply_aliases(band_raw, aliases, label_col="norm_label",
-                           out_col="canon_label")
+    band_m = raw_m.join(F.broadcast(alias_preimage(aliases, wanted)),
+                        "norm_label")
     # hash-spread order: an unbiased deterministic sample of the label's
     # turns (md5 is identical in Spark and DuckDB, so the oracle mirrors
     # the exact sample); conv/turn tiebreak for md5-collision paranoia.
@@ -384,9 +277,8 @@ def _mention_context(mentions: DataFrame, aliases: DataFrame,
         apply_aliases(
             raw_m.join(F.broadcast(sampled), ["conv_id", "turn_idx"]),
             aliases, label_col="norm_label", out_col="canon_label")
-        # labels is one row per canon_label by construction
-        # (normalized_labels groupBy) — no distinct shuffle in this
-        # broadcast build
+        # labels is one row per canon_label by construction (the labels
+        # stage's groupBy) — no distinct shuffle in this broadcast build
         .join(F.broadcast(labels.select("canon_label")),
               "canon_label", "left_semi")
         .where(F.col("canon_label") != F.col("__band"))
@@ -406,7 +298,7 @@ def _mention_context(mentions: DataFrame, aliases: DataFrame,
     # yields the identical context vector — one aggregate stage instead
     # of window + filter + aggregate (each a codegen stage of fixed
     # latency on a frame that is band-sized anyway)
-    out = (
+    return (
         co.groupBy("__band")
         .agg(F.sort_array(F.transform(
             F.slice(F.array_sort(F.collect_list(
@@ -415,10 +307,6 @@ def _mention_context(mentions: DataFrame, aliases: DataFrame,
             lambda x: x["b"])).alias("context"))
         .withColumnRenamed("__band", "canon_label")
     )
-    # cache=False exists for the plan audit only (scripts/explain_plans.py
-    # asserts the WindowGroupLimit pushdown on the UNCACHED plan — the
-    # InMemoryRelation node hides its child subtree in formatted explain)
-    return out.cache() if cache else out
 
 
 def resolve(
@@ -443,6 +331,13 @@ def resolve(
     fingerprints AND config — so a re-run reuses exactly the stages
     whose inputs did not change. Stage functions are looked up as module
     globals when each stage runs, so a tracer can rebind them.
+
+    Labels canonicalize one way, a broadcast join on the alias table:
+    apply_aliases in the labels stage, and its preimage
+    (normalize.alias_preimage) where raw mention rows must land in a
+    label set (the context band, the mention_clusters join-back). The
+    alias table is never collected to the driver, so its size is bounded
+    by the broadcast threshold, not by plan literals.
 
     decisions: a (label_a, label_b, score) cache from an earlier run;
     cached pairs are reused without rescoring (score_pairs).
@@ -479,8 +374,11 @@ def resolve(
 
         ctx = _mention_context(mentions, aliases, labels,
                                scoring.band_labels(scored_fresh))
-        if ctx is not None:
-            ctx_caches.append(ctx)
+        if ctx is None:
+            return None
+        # the two broadcast builds in apply_context_bonus both read it:
+        # the first populates the cache for the second
+        ctx_caches.append(ctx.cache())
         return ctx
 
     try:
@@ -498,8 +396,8 @@ def resolve(
             "mentions", f"arrays:{turns_fp}",
             lambda: mention_arrays_from_turns(turns),
             rows=lambda df: df.agg(F.sum(F.size("norm_labels"))).collect()[0][0])
-        # every consumer (labels fallback, ctx, mention_clusters) scans the
-        # materialized arrays and explodes in-stage
+        # the row consumers (ctx, mention_clusters) scan the materialized
+        # arrays and explode in-stage
         mentions = explode_mention_arrays(m_arrays)
         labels = store.stage(
             "labels", f"{turns_fp}:{alias_fp}:ms={min_sessions}",
@@ -535,34 +433,16 @@ def resolve(
         for c in ctx_caches:  # scored is materialized; the ctx cache is dead
             c.unpersist()
 
-    # r7: ONE broadcast probe instead of two. The former shape —
-    # apply_aliases (broadcast left join on the alias dim) then an inner
-    # join against clusters — ran every mention row through two
-    # broadcast hash probes (~10s of the 11s mention_clusters action at
-    # sf1.0/local[32], r7 probe: the bare cache scan is 0.9s). Both dims
-    # are tiny, so precompute the preimage of `clusters` under aliasing
-    # as ONE dimension keyed by raw norm_label: surfaces that
-    # canonicalize into a clustered label, plus clustered labels that
-    # are not themselves remapped surfaces (a remapped surface can never
-    # canonicalize to itself). Inner-join semantics are preserved
-    # exactly: a mention row survives iff its canonical label is in
-    # clusters, with the same canon_label/cluster_id values.
+    # ONE broadcast probe: the former apply_aliases-then-inner-join
+    # shape ran every mention row through two broadcast hash probes
+    # (~10s of the 11s mention_clusters action at sf1.0/local[32], r7
+    # probe: the bare cache scan is 0.9s). Joining on the preimage of
+    # `clusters` under aliasing keeps the inner-join semantics exactly:
+    # a mention row survives iff its canonical label is clustered, with
+    # the same canon_label/cluster_id values
     cl = clusters.select(F.col("label").alias("canon_label"), "cluster_id")
-    dim_alias = (
-        aliases.select(F.col("surface").alias("norm_label"),
-                       F.col("canonical").alias("canon_label"))
-        .join(cl, "canon_label")
-        .select("norm_label", "canon_label", "cluster_id")
-    )
-    dim_direct = (
-        cl.withColumn("norm_label", F.col("canon_label"))
-        .join(aliases.select(F.col("surface").alias("norm_label")),
-              "norm_label", "left_anti")
-        .select("norm_label", "canon_label", "cluster_id")
-    )
     mention_clusters = (
-        mentions.join(F.broadcast(dim_alias.unionByName(dim_direct)),
-                      "norm_label")
+        mentions.join(F.broadcast(alias_preimage(aliases, cl)), "norm_label")
         .select("conv_id", "turn_idx", "platform", "ts", "mention",
                 "norm_label", "mention_id", "pos", "canon_label",
                 "cluster_id")

@@ -83,7 +83,7 @@ def bench_shuffle_partitions(cpus: int) -> int:
     aggregation), and the re-measured A/B now favors full width: the
     one remaining large exchange (per-conv label arrays) reads 4.9s at
     16 vs 3.9s at 32 reduce tasks, and the sf1.0 headline 41.6/39.2s at
-    16 vs 37.8/35.6s at 32 (interleaved pairs, scripts/r7_width_*).
+    16 vs 37.8/35.6s at 32 (interleaved pairs, probe in commit 4247e06).
     AQE size-based coalescing still collapses small shuffles, so
     sub-second queries are unaffected. Shared by every measurement
     entry point so a re-tune lands once."""
