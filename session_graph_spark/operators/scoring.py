@@ -1,7 +1,8 @@
 """Pairwise match scoring (SURVEY.md §2.10 F2/J7, M3).
 
 Candidate label pairs -> similarity score via the Arrow-batched kernel in
-functions/similarity.py; pairs scoring >= MATCH_THRESHOLD (0.7, the
+functions/similarity.py (a whole-batch numpy array program per Arrow
+batch, no per-pair Python); pairs scoring >= MATCH_THRESHOLD (0.7, the
 reference's confidence threshold at link_entities.py:57) become match
 edges.
 
@@ -36,6 +37,17 @@ PAIR_KEY = ["label_a", "label_b"]
 CTX_BAND_LO = MATCH_THRESHOLD - CTX_WEIGHT
 
 
+def _variant_shaped():
+    """levenshtein_ratio(label_a, label_b) >= CTX_VARIANT_LEV as a JVM
+    column: the variant-shape guard that both band_labels and
+    apply_context_bonus apply."""
+    return (
+        1.0
+        - F.levenshtein("label_a", "label_b")
+        / F.greatest(F.length("label_a"), F.length("label_b"))
+    ) >= F.lit(CTX_VARIANT_LEV)
+
+
 def band_labels(scored: DataFrame) -> DataFrame:
     """Distinct labels appearing in a borderline pair the bonus could
     actually move: kernel in [CTX_BAND_LO, threshold) AND variant-shaped
@@ -51,10 +63,7 @@ def band_labels(scored: DataFrame) -> DataFrame:
     band = scored.where(
         (F.col("score") >= F.lit(CTX_BAND_LO))
         & (F.col("score") < F.lit(MATCH_THRESHOLD))
-        & ((1.0
-            - F.levenshtein("label_a", "label_b")
-            / F.greatest(F.length("label_a"), F.length("label_b")))
-           >= F.lit(CTX_VARIANT_LEV))
+        & _variant_shaped()
     )
     return (
         band.select(F.col("label_a").alias("canon_label"))
@@ -89,12 +98,7 @@ def apply_context_bonus(scored: DataFrame, context: DataFrame) -> DataFrame:
         (F.col("score") >= F.lit(CTX_BAND_LO))
         & (F.col("score") < F.lit(MATCH_THRESHOLD))
     )
-    variant_shaped = (
-        1.0
-        - F.levenshtein("label_a", "label_b")
-        / F.greatest(F.length("label_a"), F.length("label_b"))
-    ) >= F.lit(CTX_VARIANT_LEV)
-    bonus = F.when(variant_shaped & (jacc >= F.lit(CTX_MIN_JACC)),
+    bonus = F.when(_variant_shaped() & (jacc >= F.lit(CTX_MIN_JACC)),
                    F.lit(CTX_WEIGHT) * jacc)
     return (
         scored.join(F.broadcast(ca), "label_a", "left")

@@ -7,6 +7,9 @@ import pytest
 def spark():
     from session_graph_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # a bounded heap: get_spark's 16g default is sized for the sf1.0
+    # bench corpus, and the test corpora need a fraction of it
+    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "4g"})
     yield s
     s.stop()

@@ -301,10 +301,11 @@ def test_sql_cc_replays_pipeline_merges(result):
     distributed CC. The canonicalized mentions feed the SQL side's
     context derivation, mirroring resolve()'s context bonus."""
     import sys
+    from pathlib import Path
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from __spark_entry__ import _score_cc_cte
     from session_graph_spark.functions.normalize import apply_aliases
 
