@@ -2545,10 +2545,10 @@ def _models_seen_oracle() -> str:
 
 def _text_features_oracle() -> str:
     """DuckDB mirror of the merged per-doc text toolbox row:
-    - lang_pred: functions.text.lang_id — stopword-profile hits per
+    - lang_pred: functions.text.lang_id_col — stopword-profile hits per
       language over the distinct lowercase word set; ties break in
-      profile order (en, es, de, fr, pt) because the Python loop only
-      replaces the best on strictly-greater hits;
+      profile order (en, es, de, fr, pt) because the reference loop
+      (_lang_id_batch) only replaces the best on strictly-greater hits;
     - n_tokens_q / punct_ratio / stopword_ratio_en / quality_score:
       functions.text.quality_features (the 0.4/0.3/0.3 blend over the
       ROUNDED intermediate columns, exactly as the Column code computes);

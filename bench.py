@@ -87,8 +87,8 @@ def main() -> None:
     def timed(name: str, fn, reps: int = 1) -> None:
         """Best-of-reps wall time: this sandbox VM shows 2-4x
         noisy-neighbor swings between identical runs (BENCH.md), and min
-        is the same noise-resistant estimator scripts/run_scaling.py
-        uses across whole bench invocations."""
+        is the same noise-resistant estimator the round-6 scaling runs
+        used across whole bench invocations."""
         best = None
         for _ in range(max(reps, 1)):
             t0 = time.time()
@@ -126,7 +126,8 @@ def main() -> None:
     er_reps = int(os.environ.get("SPARK_GRAFT_ER_REPS", "2"))
     timed("er_pipeline", run_er, reps=er_reps)
 
-    # scaling runs (scripts/run_scaling.py) compare er_pipeline
+    # scaling runs (round 6; the driver script is deleted, BENCH.md
+    # keeps its numbers) compare er_pipeline
     # throughput across parallelism levels over many whole invocations:
     # the rest of the suite would only add wall-clock without adding
     # signal there

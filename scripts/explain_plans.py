@@ -5,7 +5,9 @@ properties that matter at 100TB:
 - parquet scans carry PushedFilters + pruned ReadSchema,
 - the alias/vocab dimension joins are BroadcastHashJoin,
 - relational stages run inside WholeStageCodegen,
-- the blocking self-join is an equi-join (no cartesian).
+- the blocking self-join is an equi-join (no cartesian),
+- the context band, cue-offset and extractor-offset plans hold no
+  Python evaluation node.
 
 Usage: python scripts/explain_plans.py [SF_DIR]   (default: sf0.01 testdata)
 """
@@ -192,6 +194,26 @@ def main() -> None:
         "Context bonus: band-limited ctx dim broadcast onto scored pairs",
         bonus_plan,
         ["BroadcastHashJoin"],
+    ))
+
+    # 8a. context band: the borderline + variant-shape filter that picks
+    # which labels get a context vector is JVM expressions (levenshtein,
+    # length), never a Python UDF. Range-backed input: a local relation
+    # would constant-fold the filter away.
+    from session_graph_spark.operators.scoring import band_labels
+
+    scored_range = spark.range(64).select(
+        F.concat(F.lit("label"), F.col("id").cast("string")).alias("label_a"),
+        F.concat(F.lit("label"), (F.col("id") + 1).cast("string")).alias("label_b"),
+        (F.lit(0.5) + F.col("id") / 256).alias("score"))
+    band_plan = explain_str(band_labels(scored_range))
+    assert "BatchEvalPython" not in band_plan \
+        and "ArrowEvalPython" not in band_plan, \
+        "the context band filter must stay JVM-side"
+    sections.append((
+        "Context band: borderline variant-shaped labels, pure JVM filter",
+        band_plan,
+        ["levenshtein", "HashAggregate"],
     ))
 
     # 8b. context-sample plan shape (round 6): the evidence sample MUST

@@ -75,23 +75,28 @@ _L2 = {
 }
 
 _SPECIAL_FIRST = ("#", "@", "$", "*", "!", "~", ".", ":", "-")
+# the anchored (prefix-match) L1 rules
+_L1_PREFIX_KEYS = (
+    "filename", "icd_short", "icd_underscore", "proto_code", "snake3",
+    "num_prefix", "version", "px", "pure_num", "ip", "duration",
+    "hexhash", "quantity", "ordinal", "fraction",
+)
 
 
-_PLAIN_ALPHA = re.compile(r"^[a-z]+$")
-_HEX_ALPHA = re.compile(r"^[a-f]{6,}$")
-
-
-def _l1_full(s: pd.Series) -> pd.Series:
-    """Full L1 rule set (all 20+ patterns) — the general path."""
+def is_valid_entity_pd(s: pd.Series) -> pd.Series:
+    """Vectorized L1 validity filter, the full rule set: the reference
+    `is_valid_entity_col` (the engine form) is tested against. Input: raw
+    (already lowercased or mixed-case) mention strings; output: boolean
+    keep-mask."""
+    s = s.fillna("")
     n = s.str.len()
+    base_reject = (n <= 1) | s.isin(STOPWORDS)
+    white = s.isin(WHITELIST)
+
     rej = pd.Series(False, index=s.index)
     rej |= s.str[0].isin(_SPECIAL_FIRST).fillna(False)
     rej |= s.str.startswith("/").fillna(False) | s.str.contains("\\\\", regex=True)
-    for key in (
-        "filename", "icd_short", "icd_underscore", "proto_code", "snake3",
-        "num_prefix", "version", "px", "pure_num", "ip", "duration",
-        "hexhash", "quantity", "ordinal", "fraction",
-    ):
+    for key in _L1_PREFIX_KEYS:
         rej |= s.str.match(_L1[key]).fillna(False)
     rej |= s.str.contains(_L1["css_dim"]).fillna(False)
     rej |= s.str.contains("%", regex=False)
@@ -99,29 +104,6 @@ def _l1_full(s: pd.Series) -> pd.Series:
     rej |= s.str.contains(_L1["parens"]).fillna(False)
     rej |= n == 2
     rej |= s.str.split().str.len().fillna(0) > 3
-    return rej
-
-
-def is_valid_entity_pd(s: pd.Series) -> pd.Series:
-    """Vectorized L1 validity filter. Input: raw (already lowercased or
-    mixed-case) mention strings; output: boolean keep-mask.
-
-    Fast path: a token matching ^[a-z]+$ can only trip the hexhash
-    (^[0-9a-f]{6,}$ restricted to letters) or 2-char rules of the full
-    set, so the other ~20 regex passes are skipped for it. Semantically
-    identical to running the full rule set (asserted by unit tests)."""
-    s = s.fillna("")
-    n = s.str.len()
-    base_reject = (n <= 1) | s.isin(STOPWORDS)
-    white = s.isin(WHITELIST)
-
-    plain = s.str.match(_PLAIN_ALPHA).fillna(False)
-    rej = pd.Series(False, index=s.index)
-    if plain.any():
-        sp = s[plain]
-        rej.loc[plain] = sp.str.match(_HEX_ALPHA).fillna(False) | (sp.str.len() == 2)
-    if (~plain).any():
-        rej.loc[~plain] = _l1_full(s[~plain])
     return (~base_reject) & (white | ~rej)
 
 
@@ -178,13 +160,6 @@ def is_linkable_entity_pd(s: pd.Series) -> pd.Series:
 # tests pin it); what changes is ~19 Java regex invocations per
 # non-plain candidate becoming 2 (guide §1.2 per-task work — measured
 # by the extraction probe in commit 4247e06).
-_L1_PREFIX_KEYS = (
-    "filename", "icd_short", "icd_underscore", "proto_code", "snake3",
-    "num_prefix", "version", "px", "pure_num", "ip", "duration",
-    "hexhash", "quantity", "ordinal", "fraction",
-)
-
-
 def _java_union_prefix(keys: tuple[str, ...]) -> str:
     parts = [
         ("(?i:" if _L1[k].flags & re.I else "(?:") + _L1[k].pattern + ")"
@@ -217,13 +192,14 @@ def is_valid_entity_col(c: Column) -> Column:
     rej_full = rej_full | (
         (n - F.length(F.replace(c, F.lit(" "), F.lit("")))) > 2
     )
-    # plain-alpha fast path (same as the pandas kernel): a ^[a-z]+$ token
-    # can only trip the hexhash or 2-char rules; CASE WHEN makes codegen
-    # evaluate only the taken branch, skipping the ~20 rlikes above.
+    # plain-alpha fast path: a ^[a-z]+$ token can only trip the hexhash
+    # or 2-char rules; CASE WHEN makes codegen evaluate only the taken
+    # branch, skipping the ~20 rlikes above (tests pin it against the
+    # full rule set, is_valid_entity_pd).
     # (r6: a translate()-char-table variant of these two tests measured
     # identical within noise in a 4-quadrant interleaved A/B —
     # microbench in commit 4247e06, narrative in BENCH.md — so the
-    # regex form stays for structural parity with the pandas kernel.)
+    # regex form stays.)
     plain = c.rlike(r"\A[a-z]+\Z")
     rej = F.when(plain, c.rlike(r"\A[a-f]{6,}\Z") | (n == 2)).otherwise(rej_full)
     return (~base_reject) & (white | ~rej)

@@ -3,8 +3,8 @@
 These extend the reference's text handling (truncation, min-length,
 normalization) with the document-level operators a 100TB training-data
 pipeline needs: language ID, quality scoring, token counting, and
-document fingerprinting. Everything is a Column expression or an
-Arrow-batched pandas UDF — no per-row Python.
+document fingerprinting. Everything is a Column expression — no
+per-row Python.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # tiny per-language stopword profiles for the n-gram/stopword heuristic
 # language identifier (deterministic, dependency-free)
@@ -77,6 +76,8 @@ def quality_features(df, text_col: str = "text"):
 
 
 def _lang_id_batch(texts: pd.Series) -> pd.Series:
+    """Stopword-profile language identifier over a pandas batch: the
+    reference lang_id_col is tested against."""
     toks = texts.fillna("").str.lower().str.split()
     def score(words: list[str]) -> str:
         if not words:
@@ -91,17 +92,12 @@ def _lang_id_batch(texts: pd.Series) -> pd.Series:
     return toks.map(score)
 
 
-@F.pandas_udf(StringType())
-def lang_id(texts: pd.Series) -> pd.Series:  # pragma: no cover
-    """Stopword-profile language identifier (Arrow-batched)."""
-    return _lang_id_batch(texts)
-
-
 def lang_id_col(c: str | Column = "text") -> Column:
-    """Pure-Column mirror of `lang_id` (decision-identical; pinned by
-    tests). Keeps language ID inside whole-stage codegen — the pandas
-    form pays the JVM->Arrow->Python boundary for ten set-membership
-    probes per row (guide §4.1: prefer built-ins when they exist).
+    """Stopword-profile language identifier as a pure Column
+    (decision-identical to _lang_id_batch; pinned by tests). Keeps
+    language ID inside whole-stage codegen — a pandas UDF would pay the
+    JVM->Arrow->Python boundary for ten set-membership probes per row
+    (guide §4.1: prefer built-ins when they exist).
 
     Exact argmax semantics of _lang_id_batch: profiles are probed in
     dict insertion order and a later language must STRICTLY beat the

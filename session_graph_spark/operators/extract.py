@@ -8,25 +8,20 @@ gazetteer + token candidate generator followed by the same normalization
 (N2) and L1 validity filter (P5), capped at 10 mentions per turn in
 occurrence-priority order (T1, triple_extraction.py:508-512).
 
-The engine path is pure-JVM column expressions over ONE trie-regex scan
+The engine is pure-JVM column expressions over ONE trie-regex scan
 (_marked_head): extract_mentions for the mention table (optionally with
 each mention's exact char offset), extract_mention_arrays for resolve().
-The Arrow-batched `mapInPandas` form (extract_mentions_pandas: vectorized
-pandas `.str` ops, one output row per extracted mention — UDTF shape, 1
-row in -> 0..10 rows out) is kept as the equivalence reference for phrase
-hits and offsets.
+The per-text plain-Python reference it is equivalence-tested against
+lives in tests/test_corpus_extract.py.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from session_graph_spark.data import ALIAS_MAP
-from session_graph_spark.functions.filters import is_valid_entity_pd
 
 MAX_MENTIONS_PER_TURN = 10
 EXTRACT_INPUT_MAX_CHARS = 1500  # reference truncates extraction input (N7)
@@ -39,9 +34,9 @@ _PHRASES = sorted(
     reverse=True,
 )
 
-# the SQL engines' per-candidate norm skips normalize_entity's trim and
-# whitespace-collapse as provable no-ops: residual tokens come from
-# split(\s+) (cannot contain whitespace) and phrase candidates are
+# the engine's per-candidate norm skips normalize_entity's trim and
+# whitespace-collapse as provable no-ops: residual tokens come from a
+# whitespace split (cannot contain whitespace) and phrase candidates are
 # literal gazetteer matches — valid ONLY while every gazetteer entry is
 # already trimmed and single-spaced, so enforce that loudly at import
 # (survives python -O, unlike assert)
@@ -88,118 +83,6 @@ def _trie_pattern(words: list[str]) -> str:
 _PHRASE_RE = re.compile(
     r"(?<![\w.])(" + _trie_pattern(_PHRASES) + r")(?!\w)"
 )
-_TOKEN_RE = re.compile(r"\S+")
-
-MENTION_SCHEMA = (
-    "conv_id string, turn_idx int, platform string, ts timestamp, "
-    "mention string, norm_label string, mention_id string, pos int"
-)
-# with_offsets=True adds `off`: the mention's 1-based char offset in the
-# lowered, truncated turn text (the coordinate system build_triples' cue
-# offsets use for the first EXTRACT_INPUT_MAX_CHARS chars)
-MENTION_SCHEMA_OFFSETS = MENTION_SCHEMA + ", off int"
-
-
-def _normalize_series(s: pd.Series) -> pd.Series:
-    """pandas mirror of functions.normalize.normalize_entity (N2)."""
-    s = s.str.strip().str.lower()
-    s = s.str.replace(r"\s+", " ", regex=True)
-    # strip the same trailing punctuation set as normalize_entity (the
-    # reference's rstrip('.,;:') — '!' and '?' are NOT stripped)
-    return s.str.replace(r"[.,;:]+$", "", regex=True)
-
-
-def _row_offsets(txt: str) -> list[int]:
-    """1-based char offsets of one row's phrase hits followed by its
-    residual tokens (the order extract_mentions_batch concatenates them),
-    read straight off the regex match starts: the residual tokens are the
-    \\S+ runs in the gaps between phrase matches."""
-    ph_offs: list[int] = []
-    tok_offs: list[int] = []
-    prev = 0
-    for m in _PHRASE_RE.finditer(txt):
-        tok_offs += [t.start() + 1 for t in _TOKEN_RE.finditer(txt, prev, m.start())]
-        ph_offs.append(m.start() + 1)
-        prev = m.end()
-    tok_offs += [t.start() + 1 for t in _TOKEN_RE.finditer(txt, prev)]
-    return ph_offs + tok_offs
-
-
-def extract_mentions_batch(pdf: pd.DataFrame,
-                           with_offsets: bool = False) -> pd.DataFrame:
-    """One Arrow batch of turns -> mention rows."""
-    off_cols = ["off"] if with_offsets else []
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            columns=["conv_id", "turn_idx", "platform", "ts", "mention",
-                     "norm_label", "mention_id", "pos", *off_cols]
-        )
-    # lowercase once up front: phrase matching avoids IGNORECASE and the
-    # downstream normalize/filter work on mention strings sees lowercase
-    # (normalize_entity lowercases anyway, so semantics are unchanged)
-    text = pdf["text"].fillna("").str.slice(0, EXTRACT_INPUT_MAX_CHARS).str.lower()
-    phrases = text.str.findall(_PHRASE_RE)
-    residual = text.str.replace(_PHRASE_RE, " ", regex=True)
-    tokens = residual.str.findall(_TOKEN_RE)
-
-    base = pdf[["conv_id", "turn_idx", "platform", "ts"]].copy()
-    # phrase hits are known dictionary entries: they bypass L1 (whitelist
-    # semantics — otherwise the filename rule would reject 'node.js');
-    # loose tokens go through the full L1 validity filter. Phrases are
-    # prepended so they win the per-turn cap — a single explode keeps that
-    # order without a concat+sort over the exploded frame.
-    base["mention"] = phrases + tokens
-    base["n_ph"] = phrases.str.len()
-    if with_offsets:
-        base["off"] = [_row_offsets(t) for t in text.tolist()]
-    out = base.explode(["mention", *off_cols], ignore_index=False)
-    out = out[out["mention"].notna()]
-    if len(out) == 0:
-        return (out.reset_index(drop=True)
-                .assign(norm_label=[], mention_id=[], pos=[])
-                .drop(columns=["n_ph"])
-                [["conv_id", "turn_idx", "platform", "ts", "mention",
-                  "norm_label", "mention_id", "pos", *off_cols]])
-    out["is_phrase"] = out.groupby(level=0).cumcount() < out["n_ph"]
-    out = out.reset_index(drop=True)
-
-    out["norm_label"] = _normalize_series(out["mention"].astype(str))
-    out = out[out["is_phrase"] | is_valid_entity_pd(out["norm_label"])]
-    # dedupe within turn (set semantics, U2) keeping first occurrence,
-    # then cap at 10 (T1)
-    out = out.drop_duplicates(["conv_id", "turn_idx", "norm_label"])
-    out["pos"] = out.groupby(["conv_id", "turn_idx"]).cumcount()
-    out = out[out["pos"] < MAX_MENTIONS_PER_TURN].reset_index(drop=True)
-    out["mention_id"] = (
-        out["conv_id"].astype(str) + "|"
-        + out["turn_idx"].astype(str) + "|"
-        + out["pos"].astype(str)
-    )
-    out["pos"] = out["pos"].astype("int32")
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    if with_offsets:
-        out["off"] = out["off"].astype("int32")
-    out = out.drop(columns=["n_ph", "is_phrase"])
-    return out[["conv_id", "turn_idx", "platform", "ts", "mention",
-                "norm_label", "mention_id", "pos", *off_cols]]
-
-
-def extract_mentions_pandas(turns: DataFrame,
-                            with_offsets: bool = False) -> DataFrame:
-    """Arrow-batched pandas implementation (the UDTF-shaped F1 form).
-
-    Kept as the reference implementation; `extract_mentions` is
-    equivalence-tested against it and is the default in the pipeline.
-    """
-    cols = ["conv_id", "turn_idx", "platform", "ts", "text"]
-    schema = MENTION_SCHEMA_OFFSETS if with_offsets else MENTION_SCHEMA
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        for pdf in batches:
-            yield extract_mentions_batch(pdf, with_offsets=with_offsets)
-
-    return turns.select(*cols).mapInPandas(run, schema=schema)
-
 
 # phrase-hit markers for the single-scan extraction head (r7). The trie
 # regex is the expensive scan — the round-6 microbench priced each trie
@@ -209,19 +92,27 @@ def extract_mentions_pandas(turns: DataFrame,
 # \x01..\x02 and both downstream needs become cheap marker scans:
 # phrase list = regexp_extract_all on the marker pattern, residual
 # tokens = split on (marker-span | whitespace), which yields exactly the
-# fragments the former replace-with-space + \s+ split produced.
-# Equivalence caveat (documented, not load-bearing): input text that
-# itself contains \x01/\x02 control bytes would mis-parse; conversation
-# text never carries them and the pandas engine equivalence tests pin
-# the behavior on real text shapes.
+# fragments the former replace-with-space + whitespace split produced.
+# Text that itself carries a marker byte has it mapped to a space
+# first (_marked_head), so the markers are unambiguous.
 _M1, _M2 = "\x01", "\x02"
+# whitespace = exactly the characters of Python's str.isspace(). Java's
+# \s is ASCII-only and would glue 'postgres\xa0redis' into one token, so
+# the two scans run in UNICODE_CHARACTER_CLASS mode ((?U): \s = Unicode
+# White_Space) with \x1c-\x1f added, which Python also counts. (A class
+# listing the characters and ranges one by one read ~25% slower on the
+# extraction head in an in-process A/B, local[4] on a 4-cpu host.) _WS
+# is the same set as a trim charset.
+_WS = ("\t\n\x0b\f\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+       + "".join(map(chr, range(0x2000, 0x200B)))
+       + "\u2028\u2029\u202f\u205f\u3000")
 _MARKER_EXTRACT = rf"{_M1}([^{_M2}]*){_M2}"
-_MARKER_OR_WS = rf"{_M1}[^{_M2}]*{_M2}|\s+"
+_MARKER_OR_WS = rf"(?U){_M1}[^{_M2}]*{_M2}|[\s\x1c-\x1f]+"
 # one phrase hit (markers included) or residual token plus the whitespace
 # after it: in text order the fragments tile `resid` past its leading
 # whitespace, so their lengths locate every candidate without a search
-_FRAGMENT = rf"((?:{_M1}[^{_M2}]*{_M2}|[^\s{_M1}{_M2}]+)\s*)"
-_WS = " \t\n\x0b\f\r"  # the characters of Java's \s
+_FRAGMENT = (rf"(?U)((?:{_M1}[^{_M2}]*{_M2}|[^\s\x1c-\x1f{_M1}{_M2}]+)"
+             rf"[\s\x1c-\x1f]*)")
 
 
 def _marked_head(turns: DataFrame):
@@ -240,7 +131,14 @@ def _marked_head(turns: DataFrame):
     from session_graph_spark.functions.filters import is_valid_entity_col
 
     java_phrase_re = _PHRASE_RE.pattern  # lookarounds are valid Java regex
-    lower_text = F.lower(F.substring("text", 1, EXTRACT_INPUT_MAX_CHARS))
+    low = F.lower(F.substring("text", 1, EXTRACT_INPUT_MAX_CHARS))
+    # marker bytes in the text become spaces (length-preserving, so
+    # offsets keep their coordinates); the byte-level contains guard
+    # keeps the translate pass off the rows that carry none
+    lower_text = F.when(
+        low.contains(_M1) | low.contains(_M2),
+        F.translate(low, _M1 + _M2, "  "),
+    ).otherwise(low)
 
     t = turns.select(
         "conv_id", "turn_idx", "platform", "ts",
@@ -381,8 +279,7 @@ def extract_mentions(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
     array ops do normalize/L1-filter/first-occurrence-dedup/cap — all
     per-row, zero shuffle, no Python workers. Input must have columns
     conv_id, turn_idx, platform, ts, text. Emits mention = normalized
-    label (the pandas form keeps the raw surface; nothing downstream
-    reads it).
+    label (nothing downstream reads the raw surface).
 
     with_offsets=True adds `off`: each mention's exact 1-based char
     offset in the lowered truncated text, consumed by
@@ -395,8 +292,6 @@ def extract_mentions(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
     (_with_candidate_offsets, _first_offset). The default path carries
     no offsets: ER never consumes them, and a dead column through the
     mention shuffle at 10^12 turns is pure cost.
-    extract_mentions_pandas is the equivalence reference for phrase hits
-    and offsets.
     """
     from pyspark.sql import functions as F
 

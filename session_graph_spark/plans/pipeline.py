@@ -82,19 +82,15 @@ def prepare_turns(turns: DataFrame) -> DataFrame:
     return t
 
 
-def _extraction_input(turns: DataFrame, dedup_turns: bool = False) -> DataFrame:
+def _extraction_input(turns: DataFrame) -> DataFrame:
     """P3/P4 row filters + the five-column projection extraction reads."""
     base = turns.where(Flt.assistant_only() & Flt.min_length_filter())
     if "platform" not in base.columns:
         base = base.withColumn("platform", F.lit("unknown"))
-    base = base.select("conv_id", "turn_idx", "platform", "ts", "text")
-    if dedup_turns:
-        base = base.dropDuplicates(["conv_id", "turn_idx"])
-    return base
+    return base.select("conv_id", "turn_idx", "platform", "ts", "text")
 
 
-def mentions_from_turns(turns: DataFrame, dedup_turns: bool = False,
-                        with_offsets: bool = False) -> DataFrame:
+def mentions_from_turns(turns: DataFrame, with_offsets: bool = False) -> DataFrame:
     """M1: extraction input filters + deterministic extraction, one row
     per mention. Serves the consumers that do not materialize first (the
     triples offsets path, the queries); resolve() extracts the per-turn
@@ -104,19 +100,10 @@ def mentions_from_turns(turns: DataFrame, dedup_turns: bool = False,
     construction path; the ER pipeline itself never reads offsets and
     keeps the narrower mention shuffle).
 
-    dedup_turns=True adds a defensive dropDuplicates on (conv_id,
-    turn_idx) for at-least-once sources. It is OFF by default: turn
-    identity is the ingest layer's contract — the readers emit unique
-    (conv_id, turn_idx) by construction and the watermark path (P12/ST3)
-    dedups re-delivered conversations — and the reference likewise
-    enforces set semantics at the graph (triple ids), not by rescanning
-    messages. The dedup is a full shuffle of the text column, the single
-    largest byte-shuffle in the pipeline at 10^7+ turns, so paying it to
-    re-assert a guarantee the source already gives is anti-scale. When
-    enabled, filters (P3/P4) and the five-column projection still come
-    first so the shuffle moves only assistant turns' projected columns."""
-    return extract_mentions(_extraction_input(turns, dedup_turns),
-                            with_offsets=with_offsets)
+    Turn identity is the ingest layer's contract: the readers emit unique
+    (conv_id, turn_idx) and the watermark path (P12/ST3) dedups
+    re-delivered conversations, so extraction does not re-check it."""
+    return extract_mentions(_extraction_input(turns), with_offsets=with_offsets)
 
 
 def mention_arrays_from_turns(turns: DataFrame) -> DataFrame:

@@ -114,7 +114,7 @@ def test_embedding_dedup_and_ann(spark):
 
 def test_text_functions(spark):
     from session_graph_spark.functions.text import (bpe_ish_token_count,
-                                                    fingerprint, lang_id,
+                                                    fingerprint, lang_id_col,
                                                     quality_features,
                                                     token_count)
 
@@ -126,7 +126,7 @@ def test_text_functions(spark):
         ["id", "text"],
     )
     got = {r["id"]: r for r in df.select(
-        "id", lang_id(F.col("text")).alias("lang"),
+        "id", lang_id_col("text").alias("lang"),
         token_count("text").alias("n_tok"),
         bpe_ish_token_count("text").alias("n_bpe"),
         fingerprint("text").alias("fp"),
@@ -144,8 +144,8 @@ def test_text_functions(spark):
 
 
 def test_lang_id_col_matches_pandas_kernel(spark):
-    """r7: q_text_features swapped the Arrow-batched lang_id UDF for the
-    pure-Column lang_id_col — pin decision equality on the shapes that
+    """lang_id_col (the engine) against its pandas reference
+    _lang_id_batch — pin decision equality on the shapes that
     exercise every branch: per-language hits, the strict-greater
     tie-break (earlier profile wins on equal hits), 'und' on no hits,
     empty/whitespace/NULL text, mixed case, and repeated profile words

@@ -2,10 +2,11 @@
 
 Cases come from the reference's documented rule examples
 (triple_extraction.py:146-258, link_entities.py:142-255).
-No Spark needed: the kernels are pure pandas.
+The kernels are pure pandas; only the JVM fast-path check needs Spark.
 """
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from session_graph_spark.functions.filters import (
     is_linkable_entity_pd,
@@ -94,22 +95,20 @@ def test_l2_accepts():
     assert not bad, f"L2 should accept: {bad}"
 
 
-def test_l1_fast_path_equals_full_rules():
-    # the ^[a-z]+$ fast path must decide identically to the full rule set
-    from session_graph_spark.functions.filters import _l1_full
+def test_l1_fast_path_equals_full_rules(spark):
+    # is_valid_entity_col's ^[a-z]+$ CASE-WHEN fast path must decide
+    # identically to the full rule set (is_valid_entity_pd)
+    from session_graph_spark.functions.filters import is_valid_entity_col
     import random
     words = (L1_REJECT + L1_ACCEPT
              + ["decade", "cafe", "deadbeef", "abcdef", "ab", "go", "xyz"]
              + ["".join(random.Random(i).choices("abcdef", k=7)) for i in range(50)]
              + ["".join(random.Random(i).choices("abcxyz", k=5)) for i in range(50)])
-    s = pd.Series([w for w in words if w])
-    from session_graph_spark.data import STOPWORDS, WHITELIST
-    n = s.str.len()
-    base_reject = (n <= 1) | s.isin(STOPWORDS)
-    white = s.isin(WHITELIST)
-    reference = (~base_reject) & (white | ~_l1_full(s))
-    got = is_valid_entity_pd(s)
-    diff = [w for w, a, b in zip(s, reference, got) if a != b]
+    words = [w for w in words if w]
+    reference = is_valid_entity_pd(pd.Series(words)).tolist()
+    df = spark.createDataFrame([(i, w) for i, w in enumerate(words)], "i int, w string")
+    got = [r[0] for r in df.orderBy("i").select(is_valid_entity_col(F.col("w"))).collect()]
+    diff = [w for w, a, b in zip(words, reference, got) if a != b]
     assert not diff, f"fast path diverges on: {diff}"
 
 

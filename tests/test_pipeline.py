@@ -168,20 +168,6 @@ def test_watermark_skip(spark):
     assert [r["conv_id"] for r in changed.collect()] == [first]
 
 
-def test_dedup_turns_opt_in(spark):
-    """At-least-once sources: dedup_turns=True collapses re-delivered
-    (conv_id, turn_idx) rows; the default trusts the ingest contract."""
-    from session_graph_spark import corpus
-    from session_graph_spark.plans.pipeline import mentions_from_turns, prepare_turns
-
-    turns = prepare_turns(corpus.generate_turns(spark, n_convs=6, seed=42))
-    doubled = turns.unionByName(turns)  # simulated redelivery
-    m1 = mentions_from_turns(turns).count()
-    m2 = mentions_from_turns(doubled, dedup_turns=True).count()
-    assert m1 == m2
-    assert mentions_from_turns(doubled).count() == 2 * m1
-
-
 def _rows(df):
     return sorted(tuple(str(v) for v in r) for r in df.collect())
 
