@@ -41,7 +41,10 @@ def main() -> int:
 
     import __spark_entry__ as E
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    # a bounded heap, as in tests/conftest.py: get_spark's 16g default is
+    # sized for the sf1.0 bench corpus
+    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8,
+                      extra_conf={"spark.driver.memory": "4g"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

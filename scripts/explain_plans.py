@@ -38,7 +38,10 @@ def main() -> None:
     from session_graph_spark.operators.blocking import candidate_pairs
     from session_graph_spark.sources.testdata import documents_as_turns
 
-    spark = get_spark(app_name="plans", master="local[8]", shuffle_partitions=8)
+    # a bounded heap, as in tests/conftest.py: get_spark's 16g default is
+    # sized for the sf1.0 bench corpus
+    spark = get_spark(app_name="plans", master="local[8]", shuffle_partitions=8,
+                      extra_conf={"spark.driver.memory": "4g"})
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.01"
     if len(sys.argv) > 1:  # scale-factor directory, as check_oracles.py takes it

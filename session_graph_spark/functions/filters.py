@@ -152,6 +152,32 @@ def is_linkable_entity_pd(s: pd.Series) -> pd.Series:
 
 
 # ---- JVM column-expression variant of L1 -----------------------------------
+# Python's Unicode \w as a Java character class: str.isalnum() or '_',
+# i.e. the general categories L* and N* plus '_'. Java's \w is ASCII-only
+# (the engine would take 'node.js' out of 'énode.js' and keep 'énode.js'
+# past the filename rule), and its (?U)\w adds the combining marks
+# (Mn/Mc/Me) and misses No ('²', '½'), so the class is spelled out by
+# category. Python 3.11 reads Unicode 14 and Java 17 Unicode 13: the L/N
+# code points Unicode 14 added are unassigned (Cn) on that JVM, so they
+# are listed behind a Cn gate. ASCII is decided by Java's \w alone, so
+# the category checks run only on non-ASCII characters (in a local[4]
+# microbenchmark of the phrase scan on a 4-cpu host, category checks on
+# every character read ~10% slower than ASCII \w, and a flat list of the
+# ranges ~3x slower; this form read the same as ASCII \w).
+_UNICODE_14_WORD = (
+    "870-887 889-88E 8B5 8C8-8C9 C5D CDD 170D 171F 1B4C 2C2F 2C5F 9FFD-9FFF "
+    "A7C0-A7C1 A7D0-A7D1 A7D3 A7D5-A7D9 A7F2-A7F4 10570-1057A 1057C-1058A "
+    "1058C-10592 10594-10595 10597-105A1 105A3-105B1 105B3-105B9 105BB-105BC "
+    "10780-10785 10787-107B0 107B2-107BA 10F70-10F81 11071-11072 11075 "
+    "11740-11746 11AB0-11ABF 12F90-12FF0 16A70-16ABE 16AC0-16AC9 1AFF0-1AFF3 "
+    "1AFF5-1AFFB 1AFFD-1AFFE 1B11F-1B122 1DF00-1DF1E 1E290-1E2AD 1E7E0-1E7E6 "
+    "1E7E8-1E7EB 1E7ED-1E7EE 1E7F0-1E7FE 2A6DE-2A6DF 2B735-2B738")
+JAVA_WORD = (r"[\w[\P{ASCII}&&[\p{L}\p{N}[\p{Cn}&&["
+             + "".join("-".join(rf"\x{{{h}}}" for h in r.split("-"))
+                       for r in _UNICODE_14_WORD.split())
+             + "]]]]]")
+
+
 # r7: the full-path rule chain is fused into two regex invocations — one
 # anchored union of the 15 prefix rules and one search union of the
 # contains-class rules (css_dim + the %, backslash, bracket and paren
@@ -161,8 +187,10 @@ def is_linkable_entity_pd(s: pd.Series) -> pd.Series:
 # non-plain candidate becoming 2 (guide §1.2 per-task work — measured
 # by the extraction probe in commit 4247e06).
 def _java_union_prefix(keys: tuple[str, ...]) -> str:
+    # \w -> JAVA_WORD, also inside a class: Java reads [[...]@./-] as a union
     parts = [
-        ("(?i:" if _L1[k].flags & re.I else "(?:") + _L1[k].pattern + ")"
+        ("(?i:" if _L1[k].flags & re.I else "(?:")
+        + _L1[k].pattern.replace("\\w", JAVA_WORD) + ")"
         for k in keys
     ]
     return r"\A(?:" + "|".join(parts) + ")"

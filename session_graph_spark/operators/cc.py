@@ -104,27 +104,26 @@ def _driver_union_find(spark, edge_rows) -> DataFrame:
 DRIVER_CC_THRESHOLD = 200_000
 
 
-def connected_components(
-    edges: DataFrame,
-    driver_threshold: int = DRIVER_CC_THRESHOLD,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Edge list (u:string, v:string) -> assignment (label, cluster_id).
 
     cluster_id is the lexicographic minimum label of the component. Nodes
     appearing only as isolated self-edges map to themselves.
     """
-    # lazy localCheckpoint: the fingerprint action below materializes it,
-    # so each iteration costs exactly one Spark action
-    e = _canonical(edges.select("u", "v")).localCheckpoint(eager=False)
-    if driver_threshold:
+    e = _canonical(edges.select("u", "v"))
+    if DRIVER_CC_THRESHOLD:
         # ONE job decides the path AND feeds the fast path: collect up to
         # threshold+1 rows — if the limit is not exceeded we already hold
-        # the entire edge set, so the previous separate count() job is
-        # free. Over-threshold graphs pay one bounded 200k-row collect
-        # before the distributed loop (driver-safe by construction).
-        probe = e.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
+        # the entire edge set. Over-threshold graphs pay one bounded
+        # 200k-row collect before the distributed loop (driver-safe by
+        # construction).
+        probe = e.limit(DRIVER_CC_THRESHOLD + 1).collect()
+        if len(probe) <= DRIVER_CC_THRESHOLD:
             return _driver_union_find(edges.sparkSession, probe)
+    # lazy localCheckpoint: only the loop needs its lineage truncated, and
+    # the first fingerprint action materializes it, so each iteration
+    # costs exactly one Spark action
+    e = e.localCheckpoint(eager=False)
     prev = (-1, 0)
     for _ in range(MAX_ITERATIONS):
         e = _large_star(e)

@@ -1,23 +1,25 @@
 """Document deduplication operators (training-data-pipeline extensions).
 
-Five strategies over a (doc_id, text) table, each returning an assignment
+Four strategies over a (doc_id, text) table, each returning an assignment
 (doc_id, dup_group, canonical_doc) or candidate-pair DataFrame:
 
 - exact_dedup:        hash-groupBy on normalized full text
-- minhash_lsh_dedup:  word-shingle MinHash -> banded LSH -> bucket pairs ->
-                      verified Jaccard -> connected components
+- minhash_dedup_pairs / minhash_dedup_groups_exact:
+                      word-shingle MinHash -> banded LSH -> bucket pairs ->
+                      exact word-shingle Jaccard verify (-> connected
+                      components for the grouping form)
 - simhash_dedup:      64-bit SimHash over token hashes; Hamming-ball
                       candidates via 4x16-bit band blocking
-- ngram_jaccard_pairs: character n-gram Jaccard verification kernel
 - embedding_dedup:    cosine near-duplicates over an embedding column
 
 All heavy per-text work runs in Arrow-batched pandas UDFs; pair generation
 and grouping are DataFrame joins through the mention-ER blocker's MinHash
 kernel, JVM banding and salted self-join (blocking.py `minhash_signatures`,
-`band_keys`, `bucket_pairs`): this is record linkage over documents. Band
-buckets are salted at blocking.MAX_BLOCK_SIZE (boilerplate corpora would
-otherwise put O(n^2) pairs in one skewed join key); only the exact-verified
-variants default to full recall.
+`band_keys`, `bucket_pairs`): this is record linkage over documents. The
+SimHash and embedding band buckets are salted at blocking.MAX_BLOCK_SIZE
+(boilerplate corpora would otherwise put O(n^2) pairs in one skewed join
+key); the exact-verified MinHash path keeps full recall and warns when a
+bucket is that skewed.
 """
 
 from __future__ import annotations
@@ -66,14 +68,6 @@ def _word_shingles(text: str, k: int) -> np.ndarray:
                     dtype=np.uint64)
 
 
-def _signatures(docs: DataFrame, text_col: str, id_col: str, n_hashes: int,
-                shingle_k: int) -> DataFrame:
-    """(doc_id, sig) word-shingle MinHash signatures."""
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    return minhash_signatures(d, "doc_id", "text", partial(_word_shingles, k=shingle_k),
-                              n_hashes, 31)
-
-
 def _dup_groups(docs: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
     """(doc_id, dup_group): connected components over (id_a, id_b) pairs;
     dup_group = the component's min doc id, a doc with no pair maps to
@@ -87,70 +81,6 @@ def _dup_groups(docs: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
         "doc_id",
         F.coalesce(F.col("cluster_id").cast("long"), F.col("doc_id")).alias("dup_group"),
     )
-
-
-def minhash_lsh_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      n_hashes: int = 128, bands: int = 32, shingle_k: int = 3,
-                      threshold: float = 0.8) -> DataFrame:
-    """Near-dup assignment (doc_id, dup_group): LSH candidates verified by
-    estimated Jaccard (signature agreement) >= threshold, then CC."""
-    sigs = _signatures(docs, text_col, id_col, n_hashes, shingle_k).cache()
-    pairs = bucket_pairs(band_keys(sigs, bands, n_hashes // bands), _BAND,
-                         "doc_id").distinct()
-    # verify: fraction of agreeing minhashes estimates Jaccard
-    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    verified = (
-        pairs.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                            lambda v: v)) / F.lit(float(n_hashes)),
-        )
-        .where(F.col("est_jaccard") >= threshold)
-    )
-    groups = _dup_groups(docs, id_col, verified)
-    # CC materialized its input (localCheckpoint + count), so the cached
-    # signatures are no longer reachable from any downstream plan
-    sigs.unpersist()
-    return groups
-
-
-def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", n_hashes: int = 128,
-                            bands: int = 32, shingle_k: int = 3,
-                            max_bucket_docs: int | None = None) -> DataFrame:
-    """LSH candidate (id_a, id_b) pairs from banded MinHash signatures.
-
-    max_bucket_docs=None (default) keeps EVERY candidate — full recall,
-    the contract of the exact-verified variants below (a cap would
-    silently drop docs 65+ of any band bucket, so a skewed corpus of
-    near-identical boilerplate would lose all their pairs while the
-    verification step still claims exactness). Pass a cap only when the
-    caller owns the recall tradeoff; the estimated-Jaccard scale path
-    (`minhash_lsh_dedup`) stays capped at MAX_BLOCK_SIZE."""
-    banded = band_keys(_signatures(docs, text_col, id_col, n_hashes, shingle_k),
-                       bands, n_hashes // bands)
-    if max_bucket_docs is None:
-        # full recall means unbounded O(bucket^2) pairs in one join key:
-        # surface the risk instead of silently eating it ('no silent
-        # caps' in reverse). Costs one extra pass over the signatures —
-        # acceptable for the oracle-exact variant; the capped scale path
-        # (minhash_lsh_dedup) never takes this branch
-        biggest = (
-            banded.groupBy(*_BAND).count()
-            .agg(F.max("count").alias("m")).first()["m"]
-        ) or 0
-        if biggest > MAX_BLOCK_SIZE:
-            warnings.warn(
-                f"minhash_candidate_pairs: largest band bucket holds "
-                f"{biggest} docs (> {MAX_BLOCK_SIZE}); uncapped full-"
-                f"recall mode will emit O(n^2) pairs for it — pass "
-                f"max_bucket_docs or use minhash_lsh_dedup for skewed "
-                f"near-identical corpora",
-                stacklevel=2,
-            )
-    return bucket_pairs(banded, _BAND, "doc_id", max_size=max_bucket_docs).distinct()
 
 
 def word_shingle_jaccard(pairs_with_text: DataFrame, shingle_k: int = 3,
@@ -173,17 +103,33 @@ def word_shingle_jaccard(pairs_with_text: DataFrame, shingle_k: int = 3,
 def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n_hashes: int = 128,
                         bands: int = 32, shingle_k: int = 3,
-                        threshold: float = 0.8,
-                        max_bucket_docs: int | None = None) -> DataFrame:
-    """Near-dup PAIRS with exact Jaccard: LSH candidate generation
-    (uncapped by default — full recall is this variant's contract), then
-    true word-shingle Jaccard verification >= threshold. This is the
-    oracle-checkable form (exact-Jaccard semantics, approximation only in
-    band collision probability); `minhash_lsh_dedup` keeps the cheaper
-    capped estimated-Jaccard verify + CC grouping as the scale path."""
+                        threshold: float = 0.8) -> DataFrame:
+    """Near-dup PAIRS with exact Jaccard: banded-MinHash LSH candidates,
+    then true word-shingle Jaccard verification >= threshold. The
+    approximation is only in band collision probability: candidate
+    generation is uncapped, because a cap would silently drop docs 65+ of
+    any band bucket (a skewed corpus of near-identical boilerplate would
+    lose all their pairs while the verify step still claims exactness)."""
     d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    cand = minhash_candidate_pairs(d, "text", "doc_id", n_hashes, bands,
-                                   shingle_k, max_bucket_docs)
+    sigs = minhash_signatures(d, "doc_id", "text",
+                              partial(_word_shingles, k=shingle_k), n_hashes, 31)
+    banded = band_keys(sigs, bands, n_hashes // bands)
+    # full recall means unbounded O(bucket^2) pairs in one join key:
+    # surface the risk instead of silently eating it, at the cost of one
+    # extra pass over the signatures
+    biggest = (
+        banded.groupBy(*_BAND).count().agg(F.max("count").alias("m")).first()["m"]
+    ) or 0
+    if biggest > MAX_BLOCK_SIZE:
+        warnings.warn(
+            f"minhash_dedup_pairs: largest band bucket holds {biggest} docs "
+            f"(> {MAX_BLOCK_SIZE}); full-recall candidate generation emits "
+            f"O(n^2) pairs for it; for skewed near-identical corpora run "
+            f"exact_dedup first, or use simhash_dedup, whose buckets are "
+            f"salted",
+            stacklevel=2,
+        )
+    cand = bucket_pairs(banded, _BAND, "doc_id", max_size=None).distinct()
     ta = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
     tb = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b"))
     with_text = cand.join(ta, "id_a").join(tb, "id_b")
@@ -203,8 +149,7 @@ def minhash_dedup_groups_exact(docs: DataFrame, text_col: str = "text",
     oracle-checkable grouping form (an all-pairs exact Jaccard + recursive
     transitive closure reproduces it in SQL). dup_group = the component's
     lexicographic-min doc id (the CC min-label convention), docs with no
-    near-dup map to themselves. `minhash_lsh_dedup` stays the cheaper
-    estimated-Jaccard-verify variant."""
+    near-dup map to themselves."""
     pairs = minhash_dedup_pairs(docs, text_col, id_col, n_hashes, bands,
                                 shingle_k, threshold)
     return _dup_groups(docs, id_col, pairs)
@@ -269,28 +214,6 @@ def simhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-# --------------------------------------------------------------------------
-# n-gram Jaccard verification kernel
-# --------------------------------------------------------------------------
-def ngram_jaccard_pairs(pairs_with_text: DataFrame, n: int = 3,
-                        text_a: str = "text_a", text_b: str = "text_b") -> DataFrame:
-    """Adds char-n-gram jaccard column to a pair DataFrame (Arrow kernel)."""
-
-    @F.pandas_udf("double")
-    def _jacc(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-        def grams(s: str) -> set[str]:
-            s = " ".join(str(s).lower().split())
-            return {s[i : i + n] for i in range(max(len(s) - n + 1, 1))}
-        out = np.empty(len(a))
-        av, bv = a.fillna(""), b.fillna("")
-        for i in range(len(a)):
-            ga, gb = grams(av.iat[i]), grams(bv.iat[i])
-            out[i] = len(ga & gb) / max(len(ga | gb), 1)
-        return pd.Series(out, index=a.index)
-
-    return pairs_with_text.withColumn("ngram_jaccard", _jacc(F.col(text_a), F.col(text_b)))
 
 
 # --------------------------------------------------------------------------

@@ -22,6 +22,7 @@ import re
 from pyspark.sql import DataFrame
 
 from session_graph_spark.data import ALIAS_MAP
+from session_graph_spark.functions.filters import JAVA_WORD, is_valid_entity_col
 
 MAX_MENTIONS_PER_TURN = 10
 EXTRACT_INPUT_MAX_CHARS = 1500  # reference truncates extraction input (N7)
@@ -80,9 +81,11 @@ def _trie_pattern(words: list[str]) -> str:
 
 
 # text is lowercased before matching (IGNORECASE costs ~3x in CPython re)
-_PHRASE_RE = re.compile(
-    r"(?<![\w.])(" + _trie_pattern(_PHRASES) + r")(?!\w)"
-)
+_PHRASE_TRIE = _trie_pattern(_PHRASES)
+
+# the phrase scan (Java regex): a gazetteer hit with no word character or
+# '.' before it and no word character after it
+_PHRASE_RE = rf"(?<![{JAVA_WORD}.])({_PHRASE_TRIE})(?!{JAVA_WORD})"
 
 # phrase-hit markers for the single-scan extraction head (r7). The trie
 # regex is the expensive scan — the round-6 microbench priced each trie
@@ -128,9 +131,6 @@ def _marked_head(turns: DataFrame):
     / 10x regexp_replace and ran ~30x slower)."""
     from pyspark.sql import functions as F
 
-    from session_graph_spark.functions.filters import is_valid_entity_col
-
-    java_phrase_re = _PHRASE_RE.pattern  # lookarounds are valid Java regex
     low = F.lower(F.substring("text", 1, EXTRACT_INPUT_MAX_CHARS))
     # marker bytes in the text become spaces (length-preserving, so
     # offsets keep their coordinates); the byte-level contains guard
@@ -142,8 +142,7 @@ def _marked_head(turns: DataFrame):
 
     t = turns.select(
         "conv_id", "turn_idx", "platform", "ts",
-        F.regexp_replace(lower_text, java_phrase_re,
-                         f"{_M1}$1{_M2}").alias("resid"),
+        F.regexp_replace(lower_text, _PHRASE_RE, f"{_M1}$1{_M2}").alias("resid"),
     ).withColumn(
         "ph", F.regexp_extract_all("resid", F.lit(_MARKER_EXTRACT), 1)
     )

@@ -21,9 +21,7 @@ per the build rules): ~40 entities whose labels overlap the synthetic
 `documents` vocabulary (so sameAs linking finds them), peer entities
 that exist ONLY remotely (the reference's pitch: "knowledge that does
 not exist in your local sessions"), a 12-class subclass hierarchy, and
-inter-entity claims for relationship bridges. `generate_remote_rows`
-extends it to arbitrary size for scale tests, same acronym trick as
-kbgen.
+inter-entity claims for relationship bridges.
 
 Template map (reference SKILL.md:477-588 -> functions here):
   W1 entity properties   -> fed_properties
@@ -198,52 +196,16 @@ def class_closure() -> list[tuple[str, str, int]]:
     return out
 
 
-def generate_remote_rows(n: int, seed: int = 11) -> tuple[
-        list[tuple[str, str, str, str]], list[tuple[str, str, str]]]:
-    """Extend the snapshot with n deterministic entities + ~0.6n claims
-    (scale-path evidence: the dimension stays broadcast-shaped at 10-39k
-    rows — the fused-name space caps there — exactly like kbgen's
-    gazetteer). Labels reuse kbgen's fused namespace prefixed 'rmt ' so
-    they never collide with local tokens or the curated snapshot.
-
-    SCALE-TEST ONLY (ADVICE r6): generated entities are assigned to the
-    curated REMOTE_CLASSES cyclically, so extra_n > 0 changes curated
-    labels' W2 peer sets and W5 bridges — the extension must never feed
-    the oracle-checked kb_federation row (it is consumed only by
-    superset tests and bench_extra's fed_ext row)."""
-    import random
-
-    from session_graph_spark.kbgen import _fused
-
-    rng = random.Random(seed)
-    ents: list[tuple[str, str, str, str]] = []
-    claims: list[tuple[str, str, str]] = []
-    classes = [q for q, _, _ in REMOTE_CLASSES]
-    for i in range(n):
-        qid = f"kbw:Q9{i:06d}"
-        label = f"rmt {_fused(i)}"
-        cls = classes[i % len(classes)]
-        ents.append((qid, label, f"synthetic remote entity {i}", cls))
-        if i and rng.random() < 0.6:
-            tgt = f"kbw:Q9{rng.randrange(i):06d}"
-            claims.append((qid, rng.choice(("P2283", "P361")), tgt))
-    return ents, claims
-
-
-def remote_dfs(spark: SparkSession, extra_n: int = 0, seed: int = 11
-               ) -> dict[str, DataFrame]:
+def remote_dfs(spark: SparkSession) -> dict[str, DataFrame]:
     """The snapshot as broadcast-ready DataFrames: entities, claims
     (P31 included), classes, closure, props."""
-    ents, claims = list(REMOTE_ENTITIES), list(REMOTE_CLAIMS)
-    if extra_n:
-        e2, c2 = generate_remote_rows(extra_n, seed)
-        ents, claims = ents + e2, claims + c2
-    p31 = [(q, "P31", c) for q, _, _, c in ents]
+    p31 = [(q, "P31", c) for q, _, _, c in REMOTE_ENTITIES]
     return {
         "entities": spark.createDataFrame(
-            ents, "qid string, label string, description string, class_qid string"),
+            REMOTE_ENTITIES,
+            "qid string, label string, description string, class_qid string"),
         "claims": spark.createDataFrame(
-            claims + p31, "s_qid string, prop string, o_qid string"),
+            REMOTE_CLAIMS + p31, "s_qid string, prop string, o_qid string"),
         "classes": spark.createDataFrame(
             [(q, l, p) for q, l, p in REMOTE_CLASSES],
             "class_qid string, class_label string, parent_qid string"),

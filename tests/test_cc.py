@@ -5,16 +5,23 @@ import random
 import networkx as nx
 import pytest
 
+from session_graph_spark.operators import cc
 from session_graph_spark.operators.cc import assign_clusters, connected_components
 
 
-def _check(spark, edge_list, driver_threshold=0):
-    """driver_threshold=0 forces the distributed large/small-star loop;
-    a large value exercises the driver union-find fast path."""
+def _cc(edges, monkeypatch, driver_threshold):
+    """connected_components with DRIVER_CC_THRESHOLD patched: 0 forces the
+    distributed large/small-star loop, a large value the driver
+    union-find fast path."""
+    monkeypatch.setattr(cc, "DRIVER_CC_THRESHOLD", driver_threshold)
+    return connected_components(edges)
+
+
+def _check(spark, monkeypatch, edge_list, driver_threshold=0):
     edges = spark.createDataFrame(edge_list or [("_", "_")], ["u", "v"])
     got = {
         r["label"]: r["cluster_id"]
-        for r in connected_components(edges, driver_threshold=driver_threshold).collect()
+        for r in _cc(edges, monkeypatch, driver_threshold).collect()
     }
     g = nx.Graph()
     g.add_edges_from(edge_list)
@@ -25,32 +32,32 @@ def _check(spark, edge_list, driver_threshold=0):
                 assert got.get(node) == root, (node, got.get(node), root)
 
 
-def test_cc_simple_chain(spark):
-    _check(spark, [("b", "a"), ("c", "b"), ("d", "c")])
+def test_cc_simple_chain(spark, monkeypatch):
+    _check(spark, monkeypatch, [("b", "a"), ("c", "b"), ("d", "c")])
 
 
-def test_cc_two_components_and_star(spark):
-    _check(spark, [("x2", "x1"), ("x3", "x1"), ("y2", "y1"), ("y3", "y2")])
+def test_cc_two_components_and_star(spark, monkeypatch):
+    _check(spark, monkeypatch, [("x2", "x1"), ("x3", "x1"), ("y2", "y1"), ("y3", "y2")])
 
 
-def test_cc_random_graphs_vs_networkx(spark):
+def test_cc_random_graphs_vs_networkx(spark, monkeypatch):
     rng = random.Random(7)
     nodes = [f"n{i:03d}" for i in range(60)]
     for trial in range(3):
         edge_list = [
             tuple(rng.sample(nodes, 2)) for _ in range(rng.randint(20, 80))
         ]
-        _check(spark, edge_list)  # distributed loop
+        _check(spark, monkeypatch, edge_list)  # distributed loop
 
 
-def test_cc_driver_fast_path_matches_distributed(spark):
+def test_cc_driver_fast_path_matches_distributed(spark, monkeypatch):
     rng = random.Random(11)
     nodes = [f"m{i:03d}" for i in range(40)]
     edge_list = [tuple(rng.sample(nodes, 2)) for _ in range(50)]
-    _check(spark, edge_list, driver_threshold=10_000)  # union-find path
+    _check(spark, monkeypatch, edge_list, driver_threshold=10_000)  # union-find path
     edges = spark.createDataFrame(edge_list, ["u", "v"])
-    a = sorted(map(tuple, connected_components(edges, driver_threshold=0).collect()))
-    b = sorted(map(tuple, connected_components(edges, driver_threshold=10_000).collect()))
+    a = sorted(map(tuple, _cc(edges, monkeypatch, 0).collect()))
+    b = sorted(map(tuple, _cc(edges, monkeypatch, 10_000).collect()))
     assert a == b
 
 
@@ -73,6 +80,6 @@ def test_cc_deterministic(spark):
 
 
 @pytest.mark.parametrize("n", [1, 2])
-def test_cc_tiny(spark, n):
+def test_cc_tiny(spark, monkeypatch, n):
     edge_list = [(f"z{i+1}", "z0") for i in range(n)]
-    _check(spark, edge_list)
+    _check(spark, monkeypatch, edge_list)

@@ -12,9 +12,12 @@ from session_graph_spark import corpus
 from session_graph_spark.functions.filters import is_valid_entity_pd
 from session_graph_spark.operators.extract import (EXTRACT_INPUT_MAX_CHARS,
                                                    MAX_MENTIONS_PER_TURN,
-                                                   _PHRASE_RE, extract_mentions)
+                                                   _PHRASE_RE, _PHRASE_TRIE,
+                                                   extract_mentions)
 from session_graph_spark.plans.pipeline import mentions_from_turns, prepare_turns
 
+# the engine's Java phrase scan, with Python's Unicode \w in the lookarounds
+_PHRASE_RE_PY = re.compile(r"(?<![\w.])(" + _PHRASE_TRIE + r")(?!\w)")
 _TOKEN_RE = re.compile(r"\S+")  # Python's \s is exactly str.isspace()
 _MARKERS_TO_SPACE = str.maketrans("\x01\x02", "  ")
 
@@ -30,7 +33,7 @@ def reference_mentions(text):
     A label's first occurrence wins, and a turn keeps at most 10."""
     low = (text or "")[:EXTRACT_INPUT_MAX_CHARS].lower().translate(_MARKERS_TO_SPACE)
     phrases, tokens, prev = [], [], 0
-    for m in _PHRASE_RE.finditer(low):
+    for m in _PHRASE_RE_PY.finditer(low):
         tokens += _TOKEN_RE.finditer(low, prev, m.start())
         phrases.append(m)
         prev = m.end()
@@ -201,16 +204,22 @@ def test_sql_offsets_equal_pandas(spark):
     a corpus slice PLUS handcrafted rows exercising the tricky paths
     (multiple phrase hits, tokens after phrases, repeated substrings,
     trailing punctuation, a phrase first seen inside a longer word, text
-    carrying the \\x01/\\x02 marker bytes, non-ASCII whitespace), and
-    every offset must index its label in the lowered text."""
+    carrying the \\x01/\\x02 marker bytes, non-ASCII whitespace, non-ASCII
+    letters touching a phrase), and every offset must index its label in
+    the lowered text."""
+    from session_graph_spark.functions.filters import JAVA_WORD
     from session_graph_spark.operators.extract import _MARKER_OR_WS, _WS
 
-    # the JVM split drops exactly str.isspace()'s characters
     every = "".join(chr(i) for i in range(3, 0x110000) if not 0xD800 <= i < 0xE000)
-    kept = spark.createDataFrame([(every,)], "s string").select(
-        F.split("s", _MARKER_OR_WS)).first()[0]
+    probe = spark.createDataFrame([(every,)], "s string")
+    # the JVM split drops exactly str.isspace()'s characters
+    kept = probe.select(F.split("s", _MARKER_OR_WS)).first()[0]
     assert set(every) - set("".join(kept)) == set(_WS) \
         == {c for c in every if c.isspace()}
+    # the phrase lookarounds' word class is exactly Python's Unicode \w
+    kept = probe.select(F.regexp_replace("s", JAVA_WORD, "")).first()[0]
+    assert set(every) - set(kept) == set(re.findall(r"\w", every)) \
+        == {c for c in every if c.isalnum() or c == "_"}
     hard = spark.createDataFrame(
         [
             ("h1", 1, "p", None,
@@ -230,6 +239,9 @@ def test_sql_offsets_equal_pandas(spark):
             ("h9", 1, "p", None, "postgres\xa0redis with kafka"),
             ("h10", 1, "p", None, "postgres\x1credis then node.js"),
             ("h11", 1, "p", None, "postgres\u2003redis\u3000kafka\x85docker"),
+            # non-ASCII word characters outside Java's ASCII \w
+            ("h12", 1, "p", None, "\xe9node.js with postgres and redis"),
+            ("h13", 1, "p", None, "vs code\xe9 with postgres and redis"),
         ],
         "conv_id string, turn_idx int, platform string, ts timestamp, text string",
     )
@@ -249,9 +261,12 @@ def test_sql_offsets_equal_pandas(spark):
     )
     h5 = {r[2]: r[5] for r in a if r[0] == "h5"}
     assert (h5["node.js"], h5["postgres"], h5["then"]) == (25, 11, 20), h5
-    for h in ("h6", "h7", "h8", "h9", "h10", "h11"):
+    for h in ("h6", "h7", "h8", "h9", "h10", "h11", "h12", "h13"):
         labels = {r[2] for r in a if r[0] == h}
         assert {"postgres", "redis"} <= labels, (h, labels)
+    # a non-ASCII letter touching a phrase keeps it from matching
+    assert "node.js" not in {r[2] for r in a if r[0] == "h12"}
+    assert "vs code" not in {r[2] for r in a if r[0] == "h13"}
     texts = {(r.conv_id, r.turn_idx): r.text.lower()
              for r in base.select("conv_id", "turn_idx", "text").collect()}
     for conv_id, turn_idx, label, _, _, off in a:
@@ -269,7 +284,7 @@ def test_offsets_path_scans_trie_once(spark):
     df = extract_mentions(base, with_offsets=True)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count(_PHRASE_RE.pattern) == 1
+    assert plan.count(_PHRASE_RE) == 1
 
 
 def test_offset_and_default_paths_agree_on_mentions(spark):

@@ -32,9 +32,11 @@ def test_exact_dedup(spark, docs):
 
 
 def test_minhash_lsh_dedup(spark, docs):
-    from session_graph_spark.operators.dedup import minhash_lsh_dedup
+    """Grouping form of the MinHash-LSH dedup: LSH candidates, exact
+    word-shingle Jaccard verify, connected components."""
+    from session_graph_spark.operators.dedup import minhash_dedup_groups_exact
 
-    out = minhash_lsh_dedup(docs, threshold=0.7)
+    out = minhash_dedup_groups_exact(docs, threshold=0.7)
     g = {r["doc_id"]: r["dup_group"] for r in out.collect()}
     for i in range(5):
         assert g[1000 + i] == g[i], f"exact dup {i} not grouped"
@@ -71,18 +73,6 @@ def test_simhash_dedup(spark, docs):
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     for i in range(5):
         assert (i, 1000 + i) in got, f"exact dup pair {i} missing (hamming 0)"
-
-
-def test_ngram_jaccard_pairs(spark):
-    from session_graph_spark.operators.dedup import ngram_jaccard_pairs
-
-    pairs = spark.createDataFrame(
-        [("abcdefgh", "abcdefgh"), ("abcdefgh", "zzzzzzzz")],
-        ["text_a", "text_b"],
-    )
-    out = ngram_jaccard_pairs(pairs).collect()
-    assert out[0]["ngram_jaccard"] == 1.0
-    assert out[1]["ngram_jaccard"] == 0.0
 
 
 def test_embedding_dedup_and_ann(spark):
@@ -416,9 +406,9 @@ def test_y4m_lazy_frame_seek_many_frames(spark):
 
 
 def test_exact_variants_keep_full_recall_over_cap(spark):
-    """The exact-Jaccard-verified variants are UNCAPPED by default: a
-    bucket with more docs than MAX_BLOCK_SIZE (skewed boilerplate) must
-    still yield every pair — a silent cap would drop docs 65+ while the
+    """The exact-Jaccard-verified variants are UNCAPPED: a bucket with
+    more docs than MAX_BLOCK_SIZE (skewed boilerplate) must still yield
+    every pair — a silent cap would drop docs 65+ while the
     verification step claims exactness."""
     from session_graph_spark.operators.blocking import MAX_BLOCK_SIZE
     from session_graph_spark.operators.dedup import minhash_dedup_pairs
@@ -428,13 +418,10 @@ def test_exact_variants_keep_full_recall_over_cap(spark):
         F.col("id").alias("doc_id"),
         F.lit("identical boilerplate text repeated verbatim").alias("text"),
     )
-    pairs = minhash_dedup_pairs(docs, threshold=0.8)
+    # the O(n^2) bucket is made visible, not silently capped
+    with pytest.warns(UserWarning, match=f"holds {n} docs"):
+        pairs = minhash_dedup_pairs(docs, threshold=0.8)
     assert pairs.count() == n * (n - 1) // 2  # full recall past the cap
-    # opting into the cap salts into sub-buckets: bounded join, and every
-    # doc (incl. 65+) keeps its intra-sub-bucket pairs
-    capped = minhash_dedup_pairs(docs, threshold=0.8,
-                                 max_bucket_docs=MAX_BLOCK_SIZE)
-    assert capped.count() == _salted_pairs(n, MAX_BLOCK_SIZE)
 
 
 def _salted_pairs(n: int, cap: int) -> int:
@@ -449,9 +436,7 @@ def test_dedup_bucket_caps(spark):
     C(cap, 2) (the unsalted form is O(n^2) in a single skewed join key)
     while docs past the cap keep their intra-sub-bucket pairs."""
     from session_graph_spark.operators.blocking import MAX_BLOCK_SIZE
-    from session_graph_spark.operators.dedup import (embedding_dedup,
-                                                     minhash_lsh_dedup,
-                                                     simhash_dedup)
+    from session_graph_spark.operators.dedup import embedding_dedup, simhash_dedup
 
     n = 2000
     docs = spark.range(n).select(
@@ -466,13 +451,6 @@ def test_dedup_bucket_caps(spark):
     assert sh.count() == exp
     # graceful degradation: the LAST doc still has candidates
     assert sh.where((F.col("id_a") == n - 2) & (F.col("id_b") == n - 1)).count() == 1
-
-    # minhash LSH: completes with a bounded assignment (would OOM/explode
-    # at 32 bands x C(2000,2) unsalted); identical docs all land in SOME
-    # dup group (not singletons), even past the cap
-    groups = minhash_lsh_dedup(docs, threshold=0.8)
-    assert groups.count() == n
-    assert groups.where(F.col("doc_id") != F.col("dup_group")).count() >= n - 32
 
     emb = spark.range(n).select(
         F.col("id").alias("vec_id"),

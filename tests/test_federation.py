@@ -83,32 +83,6 @@ def test_fed_properties_capped_and_labeled(spark):
         x["prop_label"] for x in rows)
 
 
-def test_generate_remote_rows_deterministic_and_disjoint(spark):
-    e1, c1 = FD.generate_remote_rows(500, seed=11)
-    e2, c2 = FD.generate_remote_rows(500, seed=11)
-    assert e1 == e2 and c1 == c2
-    gen_labels = {l for _, l, _, _ in e1}
-    cur_labels = {l for _, l, _, _ in FD.REMOTE_ENTITIES}
-    assert not gen_labels & cur_labels
-    # every generated claim resolves inside the generated set
-    qids = {q for q, _, _, _ in e1}
-    assert all(s in qids and o in qids for s, _, o in c1)
-
-
-def test_remote_dfs_scale_extension_links_identically(spark):
-    """A 5k-row extension must not change what the curated labels link
-    to (superset property, mirroring the kbgen gazetteer invariant)."""
-    small = FD.remote_dfs(spark)
-    big = FD.remote_dfs(spark, extra_n=5000)
-    labels = spark.createDataFrame(
-        [("spark",), ("sort",), ("table",)], "label string")
-    a = {(r["label"], r["qid"])
-         for r in FD.same_as(labels, small["entities"]).collect()}
-    b = {(r["label"], r["qid"])
-         for r in FD.same_as(labels, big["entities"]).collect()}
-    assert a == b
-
-
 def test_kb_federation_composite_consistent_with_templates(spark):
     """The driver row's composite union contains exactly the six
     template outputs (tag counts match the individual functions)."""

@@ -103,7 +103,9 @@ def test_l1_fast_path_equals_full_rules(spark):
     words = (L1_REJECT + L1_ACCEPT
              + ["decade", "cafe", "deadbeef", "abcdef", "ab", "go", "xyz"]
              + ["".join(random.Random(i).choices("abcdef", k=7)) for i in range(50)]
-             + ["".join(random.Random(i).choices("abcxyz", k=5)) for i in range(50)])
+             + ["".join(random.Random(i).choices("abcxyz", k=5)) for i in range(50)]
+             # non-ASCII word characters under the rules' \w
+             + ["\xe9node.js", "caf\xe9.py", "na\xefve_file.md", "2 gr\xf6\xdfes"])
     words = [w for w in words if w]
     reference = is_valid_entity_pd(pd.Series(words)).tolist()
     df = spark.createDataFrame([(i, w) for i, w in enumerate(words)], "i int, w string")
